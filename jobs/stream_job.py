@@ -93,9 +93,12 @@ def main(argv=None) -> int:
                     help="shard count for the chunk tier layout")
     ap.add_argument("--state-shards", type=int, default=64,
                     help="stateful-writer hash shards (one columnar "
-                         "state buffer per shard — O(shards) Python "
-                         "crossings per micro-batch instead of one "
-                         "per open series); 0 = per-series state")
+                         "state buffer per shard — O(shards) handler "
+                         "calls per micro-batch instead of one per "
+                         "open series); 0 = per-series state. Python "
+                         "worker invocations per micro-batch stay 2 x "
+                         "the state partitions (the checkpoint's "
+                         "spark.sql.shuffle.partitions) either way")
     ap.add_argument("--distinct-sketch", default="",
                     help="also maintain an HLL distinct sketch tier "
                          "over this column (e.g. conv_id)")

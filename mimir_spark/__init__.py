@@ -17,3 +17,7 @@ vectorized Arrow/pandas UDFs (codec, chunk build).
 """
 
 __version__ = "0.1.0"
+
+from .session import cache_zip_directories as _cache_zip_directories
+
+_cache_zip_directories()

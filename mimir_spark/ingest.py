@@ -108,16 +108,19 @@ def _token_counts_arrow(arr):
 
 
 def _narrow_turns_arrow_fn(iterator):
-    """mapInArrow body for ``narrow_turns``: pass the five narrow
-    columns through untouched, reduce ``text`` to ``n_tok``."""
+    """mapInArrow body for ``narrow_turns``: pass the other columns
+    through untouched and in order, reduce ``text`` (found by name) to
+    a trailing ``n_tok``."""
     import pyarrow as pa
 
     for batch in iterator:
-        cols = [batch.column(i) for i in range(batch.num_columns - 1)]
-        names = batch.schema.names[:-1]
-        cols.append(_token_counts_arrow(batch.column(batch.num_columns - 1)))
-        names.append("n_tok")
-        yield pa.RecordBatch.from_arrays(cols, names=names)
+        names = batch.schema.names
+        t = names.index("text")
+        keep = [i for i in range(batch.num_columns) if i != t]
+        cols = [batch.column(i) for i in keep]
+        cols.append(_token_counts_arrow(batch.column(t)))
+        yield pa.RecordBatch.from_arrays(
+            cols, names=[names[i] for i in keep] + ["n_tok"])
 
 
 def dedup_turns(df: DataFrame) -> DataFrame:

@@ -776,15 +776,20 @@ def _streaming_chunks_sharded(stream: DataFrame, tier: str,
                               watermark: str, shards: int) -> DataFrame:
     """Sharded-state body of streaming_rollup_chunks (shards=N).
 
-    Why it exists: the per-series writer invokes the Python state
+    Why it exists: the per-series writer calls the Python state
     handler once per OPEN SERIES per micro-batch — measured ~2.5k
     turns/s on the rehearsal corpus (~500k open series), dominated by
-    per-group pandas/pickle crossings, not encode work (BENCH.md).
+    per-group pandas/pickle work, not encode work (BENCH.md).
     Grouping by ``pmod(xxhash64(series), shards)`` instead keeps one
-    columnar buffer per shard, so a micro-batch makes O(shards) Python
-    crossings and every per-point step (sort, bucket close, aggregate,
+    columnar buffer per shard, so a micro-batch makes O(shards) handler
+    calls and every per-point step (sort, bucket close, aggregate,
     Gorilla encode) is one vectorized numpy pass over the shard — the
-    same memtable-per-shard shape an LSM ingester uses. Emitted rows
+    same memtable-per-shard shape an LSM ingester uses. Either way a
+    micro-batch runs 2 x (the stream's state partitions) Python worker
+    invocations, a data pass plus a timeout pass per partition; the
+    state partition count is ``spark.sql.shuffle.partitions``, fixed
+    when the checkpoint is created. ``shards`` only sets how many
+    handler calls happen inside those invocations. Emitted rows
     are identical to the per-series writer's (asserted bit-for-bit in
     tests): intra-chunk point order is (ts, conv_id, turn_idx) via
     integer lexsort over order-preserving np.unique codes.
@@ -832,10 +837,13 @@ def streaming_rollup_chunks(stream: DataFrame, tier: str = "1m",
     ``shards``: None keeps one state row per series (the reference
     shape; fine at moderate series cardinality). An integer switches
     to the sharded-state writer — one columnar buffer per hash shard,
-    O(shards) Python crossings per micro-batch instead of O(open
-    series) — the high-cardinality live-tail configuration
+    O(shards) handler calls per micro-batch instead of O(open series)
+    — the high-cardinality live-tail configuration
     (_streaming_chunks_sharded; stream_job defaults to it). Output is
-    identical bit-for-bit either way.
+    identical bit-for-bit either way. Python worker invocations per
+    micro-batch do not depend on ``shards``: they are 2 x the state
+    partitions (``spark.sql.shuffle.partitions`` when the checkpoint
+    was created), a data pass and a timeout pass.
     """
     if shards:
         return _streaming_chunks_sharded(stream, tier, watermark, shards)

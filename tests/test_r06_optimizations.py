@@ -83,6 +83,27 @@ def test_arrow_token_count_all_space_batch(spark):
     assert got == {0: 0, 1: 0, 2: 0, 3: 0}
 
 
+def test_narrow_turns_arrow_fn_finds_text_by_name():
+    """The Arrow body must not depend on ``text`` being the last
+    column: a batch with ``text`` first still passes every other
+    column through in order and counts the right column."""
+    import pyarrow as pa
+
+    from mimir_spark.ingest import _narrow_turns_arrow_fn
+
+    texts = ["hello world", None, " a\tb ", ""]
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array(texts), pa.array(["c1", "c1", "c2", "c2"]),
+         pa.array([0, 1, 0, 1], type=pa.int32()),
+         pa.array(["user", "tool", "user", "user"])],
+        names=["text", "conv_id", "turn_idx", "role"])
+    (out,) = list(_narrow_turns_arrow_fn(iter([batch])))
+    assert out.schema.names == ["conv_id", "turn_idx", "role", "n_tok"]
+    for name in ("conv_id", "turn_idx", "role"):
+        assert out.column(name).equals(batch.column(name))
+    assert out.column("n_tok").to_pylist() == [2, 0, 2, 0]
+
+
 def test_arrow_token_count_matches_on_fixture(spark, t_small_df):
     new = narrow_turns(t_small_df).select("conv_id", "turn_idx", "n_tok")
     old = t_small_df.select("conv_id", "turn_idx",
