@@ -95,10 +95,10 @@ def main(argv=None) -> int:
                     help="stateful-writer hash shards (one columnar "
                          "state buffer per shard — O(shards) handler "
                          "calls per micro-batch instead of one per "
-                         "open series); 0 = per-series state. Python "
-                         "worker invocations per micro-batch stay 2 x "
-                         "the state partitions (the checkpoint's "
-                         "spark.sql.shuffle.partitions) either way")
+                         "open series; >= 1). Python worker "
+                         "invocations per micro-batch stay 2 x the "
+                         "state partitions (the checkpoint's "
+                         "spark.sql.shuffle.partitions)")
     ap.add_argument("--distinct-sketch", default="",
                     help="also maintain an HLL distinct sketch tier "
                          "over this column (e.g. conv_id)")
@@ -134,6 +134,8 @@ def main(argv=None) -> int:
         return _print_status(args.store)
     if not args.source:
         ap.error("--source is required unless --status")
+    if args.state_shards < 1:
+        ap.error("--state-shards must be >= 1")
 
     from mimir_spark.fixtures import TRANSCRIPT_SCHEMA_NTZ
     from mimir_spark.lineage import TieredStore
@@ -176,7 +178,7 @@ def main(argv=None) -> int:
         queries.append(start(
             streaming_rollup_chunks(reader(), tier=args.tier,
                                     watermark=args.watermark,
-                                    shards=args.state_shards or None),
+                                    shards=args.state_shards),
             chunk_store_sink(store, args.tier, app_id=args.app_id,
                              num_partitions=args.partitions),
             "chunks"))

@@ -79,11 +79,3 @@ def bm25_scores(tokens: DataFrame, term: str, k1: float = 1.2,
         .select("doc_id",
                 F.round(idf * tf * (k1 + 1.0) / denom, 6).alias("score"))
     )
-
-
-def rank_documents(scored: DataFrame, k: int | None = None) -> DataFrame:
-    """Block-incremental top-k of the reference
-    (RankingQueryRunnerImpl.java:516-573) collapses to
-    TakeOrderedAndProject: orderBy(score desc, id asc) [+ limit]."""
-    out = scored.orderBy(F.desc("score"), F.asc(scored.columns[0]))
-    return out.limit(k) if k else out

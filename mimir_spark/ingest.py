@@ -281,16 +281,3 @@ def turn_metrics(df: DataFrame, extractors: list | None = None) -> DataFrame:
             F.col("e.v").alias("v"),
         )
     )
-
-
-def with_salt(df: DataFrame, keys: list[str], buckets: int = 16,
-              salt_col: str = "_salt") -> DataFrame:
-    """Explicit skew salt: uniform sub-key within a hot group.
-
-    Used by two-stage aggregation (partial per (keys, salt), final per
-    keys) so a hot conversation/tool can't pin a single reducer — the
-    engine-level analogue of the reference's round-robin doc sharding.
-    """
-    return df.withColumn(
-        salt_col, F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(buckets))
-    )

@@ -72,79 +72,111 @@ def _encode_group_chunks(ts_us, v, starts, max_points):
     return out
 
 
-def _rollup_block(kind, key, metric, ts_us, v, tiers,
-                  max_points=None) -> pd.DataFrame:
-    """Vectorized rollup of a sorted block of complete day-groups."""
+def _change_mask(arrays):
+    """True where any of ``arrays`` differs from the previous row (row
+    0 is always True): the series-start mask the kernel consumes."""
+    change = np.ones(len(arrays[0]), dtype=bool)
+    change[1:] = arrays[0][1:] != arrays[0][:-1]
+    for a in arrays[1:]:
+        change[1:] |= a[1:] != a[:-1]
+    return change
+
+
+def rollup_groups(ts_us, v, series_start, units, max_points=None):
+    """The one group-aggregate-encode kernel every rollup writer runs.
+
+    ``ts_us``/``v`` are sorted by (series, ts, tiebreak) and
+    ``series_start`` marks each series' first row, so groups are found
+    with integer/boolean compares only. Per tier width in ``units``
+    (microseconds), yields ``(starts, aggs)``: the row index opening
+    each (series, bucket) group and its bucket_ts / cnt / sum_v /
+    min_v / max_v / last_v / chunk columns. Callers attach their own
+    label columns by indexing them with ``starts``."""
     n = len(ts_us)
-    series_change = np.zeros(n, dtype=bool)
-    series_change[0] = True
-    if n > 1:
-        series_change[1:] = (
-            (kind[1:] != kind[:-1]) | (key[1:] != key[:-1]) | (metric[1:] != metric[:-1])
-        )
-    frames = []
-    for tier in tiers:
-        unit = TIER_US[tier]
+    for unit in units:
         bucket = ts_us - ts_us % unit
-        change = series_change.copy()
-        if n > 1:
-            change[1:] |= bucket[1:] != bucket[:-1]
+        change = series_start.copy()
+        change[1:] |= bucket[1:] != bucket[:-1]
         starts = np.flatnonzero(change)
         ends = np.append(starts[1:], n)
-        chunks = _encode_group_chunks(ts_us, v, starts, max_points)
-        frames.append(pd.DataFrame({
-            "tier": tier,
-            "kind": kind[starts],
-            "series_key": key[starts],
-            "metric": metric[starts],
+        yield starts, {
             "bucket_ts": bucket[starts].astype("datetime64[us]"),
             "cnt": (ends - starts).astype(np.int64),
             "sum_v": np.add.reduceat(v, starts),
             "min_v": np.minimum.reduceat(v, starts),
             "max_v": np.maximum.reduceat(v, starts),
             "last_v": v[ends - 1],
-            "chunk": pd.Series(chunks, dtype=object),
-        }))
-    return pd.concat(frames, ignore_index=True)
+            "chunk": pd.Series(_encode_group_chunks(ts_us, v, starts,
+                                                    max_points),
+                               dtype=object),
+        }
 
 
-def _make_rollup_fn(tiers, max_points=None):
+def _whole_groups(batches, coarsest_us, series_cols):
+    """Regroup sorted Arrow batches into dicts of column arrays that
+    hold only whole (series, coarsest-bucket) groups (``ts`` becomes
+    epoch micros). The open last group is carried as a list of slices
+    and joined once when it closes, so every row is copied at most
+    once however many batches a group spans."""
+    tail, last = [], None
+    for pdf in batches:
+        if len(pdf) == 0:
+            continue
+        cols = {c: pdf[c].to_numpy() for c in pdf.columns}
+        cols["ts"] = cols["ts"].astype("datetime64[us]").astype(np.int64)
+        keys = [cols[c] for c in series_cols]
+        keys.append(cols["ts"] - cols["ts"] % coarsest_us)
+        change = _change_mask(keys)
+        change[0] = last is not None and any(
+            k[0] != x for k, x in zip(keys, last))
+        last = [k[-1] for k in keys]
+        cuts = np.flatnonzero(change)
+        if len(cuts):
+            cut = int(cuts[-1])
+            if cut:
+                tail.append({c: a[:cut] for c, a in cols.items()})
+            yield _join(tail)
+            tail, cols = [], {c: a[cut:] for c, a in cols.items()}
+        tail.append(cols)
+    if tail:
+        yield _join(tail)
+
+
+def _join(parts):
+    if len(parts) == 1:
+        return parts[0]
+    return {c: np.concatenate([p[c] for p in parts]) for c in parts[0]}
+
+
+def _carry_fn(tiers, series_cols, block):
+    """mapInPandas body: ``block(cols)`` over each run of whole groups."""
     coarsest = TIER_US[tiers[-1]]
 
     def process(iterator):
-        buf = None
-        for pdf in iterator:
-            if len(pdf) == 0:
-                continue
-            buf = pdf if buf is None else pd.concat([buf, pdf], ignore_index=True)
-            kind = buf["kind"].to_numpy()
-            key = buf["series_key"].to_numpy()
-            metric = buf["metric"].to_numpy()
-            ts_us = buf["ts"].to_numpy().astype("datetime64[us]").astype(np.int64)
-            day = ts_us - ts_us % coarsest
-            n = len(buf)
-            change = np.zeros(n, dtype=bool)
-            if n > 1:
-                change[1:] = (
-                    (kind[1:] != kind[:-1]) | (key[1:] != key[:-1])
-                    | (metric[1:] != metric[:-1]) | (day[1:] != day[:-1])
-                )
-            cuts = np.flatnonzero(change)
-            if len(cuts):
-                cut = int(cuts[-1])
-                v = buf["v"].to_numpy(dtype=np.float64)
-                yield _rollup_block(kind[:cut], key[:cut], metric[:cut],
-                                    ts_us[:cut], v[:cut], tiers, max_points)
-                buf = buf.iloc[cut:].reset_index(drop=True)
-        if buf is not None and len(buf):
-            kind = buf["kind"].to_numpy()
-            key = buf["series_key"].to_numpy()
-            metric = buf["metric"].to_numpy()
-            ts_us = buf["ts"].to_numpy().astype("datetime64[us]").astype(np.int64)
-            v = buf["v"].to_numpy(dtype=np.float64)
-            yield _rollup_block(kind, key, metric, ts_us, v, tiers, max_points)
+        for cols in _whole_groups(iterator, coarsest, series_cols):
+            yield block(cols)
 
     return process
+
+
+def _make_rollup_fn(tiers, max_points=None):
+    """Generic points rollup over (kind, series_key, metric, ts, v)
+    rows sorted by (series, ts, conv_id, turn_idx) within partitions."""
+    units = [TIER_US[t] for t in tiers]
+
+    def block(cols):
+        kind, key, metric = (cols[c] for c in _SERIES_COLS)
+        v = np.asarray(cols["v"], dtype=np.float64)
+        groups = rollup_groups(cols["ts"], v,
+                               _change_mask([kind, key, metric]), units,
+                               max_points)
+        return pd.concat([
+            pd.DataFrame({"tier": tier, "kind": kind[s],
+                          "series_key": key[s], "metric": metric[s],
+                          **aggs})
+            for tier, (s, aggs) in zip(tiers, groups)], ignore_index=True)
+
+    return _carry_fn(tiers, _SERIES_COLS, block)
 
 
 def _check_tiers(tiers):
@@ -175,125 +207,12 @@ def rollup_points(points: DataFrame, tiers: tuple[str, ...] = ("1m", "1h", "1d")
     return shuffled.mapInPandas(_make_rollup_fn(tiers, max_points), ROLLUP_SCHEMA)
 
 
-# closed metric vocabulary of the transcript pipeline: shipped to the
-# Arrow pass as int8 codes so boundary detection is integer compares,
-# not 30M python string comparisons
+# closed metric vocabulary of the conv fan-out: a turn's role_code is
+# the index of its role_mix metric, so the Arrow pass selects each
+# metric's turns with an integer compare
 METRICS = ["turn_rate", "token_volume",
            "role_mix_user", "role_mix_assistant", "role_mix_tool",
            "role_mix_other"]
-_METRIC_ARR = np.array(METRICS)
-
-
-def _conv_points_fast(turns: DataFrame, shard_expr=None) -> DataFrame:
-    """conv-kind metric explode with int8 metric codes
-    (series_key == conv_id; kind implied). ``shard_expr``: optional
-    Column carrying the job shard id (a pure function of conv_id) —
-    rides along so the Arrow pass can emit per-shard kinds."""
-    tok = F.col("n_tok").cast("double")
-    # out-of-vocabulary roles map to the role_mix_other catch-all (same
-    # as turn_metrics); null roles emit no role_mix point on either path
-    role_metric = (
-        F.when(F.col("role") == "user", F.lit(2))
-        .when(F.col("role") == "assistant", F.lit(3))
-        .when(F.col("role") == "tool", F.lit(4))
-        .when(F.col("role").isNotNull(), F.lit(5))
-    )
-    entry = lambda mid, v: F.struct(  # noqa: E731
-        mid.cast("int").alias("metric_id"), v.alias("v"))
-    entries = F.array(
-        entry(F.lit(0), F.lit(1.0)),
-        entry(F.lit(1), tok),
-        entry(role_metric, F.lit(1.0)),
-    )
-    extra = [shard_expr.alias("shard")] if shard_expr is not None else []
-    return (
-        turns.select(F.col("conv_id").alias("series_key"), "ts", "turn_idx",
-                     *extra, F.explode(entries).alias("e"))
-        .filter(F.col("e.metric_id").isNotNull())
-        .select("series_key", F.col("e.metric_id").alias("metric_id"),
-                "ts", "turn_idx", *(["shard"] if extra else []),
-                F.col("e.v").alias("v"))
-    )
-
-
-def _rollup_block_fast(key, metric_id, ts_us, v, tiers, kind: str,
-                       max_points=None, shard=None) -> pd.DataFrame:
-    n = len(ts_us)
-    series_change = np.zeros(n, dtype=bool)
-    series_change[0] = True
-    if n > 1:
-        series_change[1:] = (metric_id[1:] != metric_id[:-1]) | (key[1:] != key[:-1])
-    frames = []
-    for tier in tiers:
-        unit = TIER_US[tier]
-        bucket = ts_us - ts_us % unit
-        change = series_change.copy()
-        if n > 1:
-            change[1:] |= bucket[1:] != bucket[:-1]
-        starts = np.flatnonzero(change)
-        ends = np.append(starts[1:], n)
-        chunks = _encode_group_chunks(ts_us, v, starts, max_points)
-        # shard-tagged kind ("<p>|conv") when a shard array rides along
-        # (the resumable job's per-shard commit groups); shard is a
-        # function of conv_id == key, so it can't split a series group
-        kind_col = (kind if shard is None else
-                    np.char.add(np.char.add(
-                        shard[starts].astype("U20"), "|"), kind))
-        frames.append(pd.DataFrame({
-            "tier": tier,
-            "kind": kind_col,
-            "series_key": key[starts],
-            "metric": _METRIC_ARR[metric_id[starts]],
-            "bucket_ts": bucket[starts].astype("datetime64[us]"),
-            "cnt": (ends - starts).astype(np.int64),
-            "sum_v": np.add.reduceat(v, starts),
-            "min_v": np.minimum.reduceat(v, starts),
-            "max_v": np.maximum.reduceat(v, starts),
-            "last_v": v[ends - 1],
-            "chunk": pd.Series(chunks, dtype=object),
-        }))
-    return pd.concat(frames, ignore_index=True)
-
-
-def _make_rollup_fast_fn(tiers, kind: str, max_points=None,
-                         with_shard: bool = False):
-    coarsest = TIER_US[tiers[-1]]
-
-    def _shard(b):
-        return b["shard"].to_numpy() if with_shard else None
-
-    def process(iterator):
-        buf = None
-        for pdf in iterator:
-            if len(pdf) == 0:
-                continue
-            buf = pdf if buf is None else pd.concat([buf, pdf], ignore_index=True)
-            key = buf["series_key"].to_numpy()
-            mid = buf["metric_id"].to_numpy()
-            ts_us = buf["ts"].to_numpy().astype("datetime64[us]").astype(np.int64)
-            day = ts_us - ts_us % coarsest
-            n = len(buf)
-            change = np.zeros(n, dtype=bool)
-            if n > 1:
-                change[1:] = ((mid[1:] != mid[:-1]) | (day[1:] != day[:-1])
-                              | (key[1:] != key[:-1]))
-            cuts = np.flatnonzero(change)
-            if len(cuts):
-                cut = int(cuts[-1])
-                v = buf["v"].to_numpy(dtype=np.float64)
-                sh = _shard(buf)
-                yield _rollup_block_fast(key[:cut], mid[:cut], ts_us[:cut],
-                                         v[:cut], tiers, kind, max_points,
-                                         shard=None if sh is None else sh[:cut])
-                buf = buf.iloc[cut:].reset_index(drop=True)
-        if buf is not None and len(buf):
-            yield _rollup_block_fast(
-                buf["series_key"].to_numpy(), buf["metric_id"].to_numpy(),
-                buf["ts"].to_numpy().astype("datetime64[us]").astype(np.int64),
-                buf["v"].to_numpy(dtype=np.float64), tiers, kind, max_points,
-                shard=_shard(buf))
-
-    return process
 
 
 def _conv_turns_narrow(turns: DataFrame, shard_expr=None) -> DataFrame:
@@ -320,81 +239,49 @@ def _conv_turns_narrow(turns: DataFrame, shard_expr=None) -> DataFrame:
 
 def _make_rollup_turns_fn(tiers, kind: str, max_points=None,
                           with_shard: bool = False):
-    """mapInPandas body over (series_key, ts, turn_idx, role_code,
-    tok[, shard]) TURN rows sorted by (series_key, ts, turn_idx)
-    within partitions: explodes each turn into its conv-kind metric
-    points in numpy and rolls every tier up in the same pass.
+    """mapInPandas body over (series_key, ts, role_code, tok[, shard])
+    TURN rows sorted by (series_key, ts, turn_idx) within partitions:
+    explodes each turn into its conv-kind metric points in numpy and
+    rolls every tier up in the same pass.
 
-    Equivalence to the exploded path (`_conv_points_fast` +
-    `_make_rollup_fast_fn`): for a fixed metric, selecting the
-    turn subset by mask preserves the (ts, turn_idx) order the
-    exploded sort produced, so every (series, metric, bucket) group
-    sees the same points in the same order — aggregates and chunk
-    bytes are identical (asserted by the rollup equivalence tests).
+    For a fixed metric, selecting the turn subset by mask preserves
+    the (ts, turn_idx) order, so every (series, metric, bucket) group
+    sees its points in the same order a JVM-side explode + sort by
+    (series, metric, ts, turn_idx) would give it.
     """
-    coarsest = TIER_US[tiers[-1]]
-    # (metric_id, mask-kind, value-kind): turn_rate/token_volume cover
-    # every turn; role_mix_<m> covers turns with role_code == m
-    def _metric_frames(key, ts_us, role, tok, shard, tiers_):
+    units = [TIER_US[t] for t in tiers]
+
+    def block(cols):
+        key, ts_us, role = cols["series_key"], cols["ts"], cols["role_code"]
+        shard = cols["shard"] if with_shard else None
         frames = []
-        ones = None
-        for mid in range(len(METRICS)):
+        # turn_rate / token_volume cover every turn; role_mix_<m>
+        # covers the turns with role_code == m
+        for mid, metric in enumerate(METRICS):
             if mid == 0:
-                k, t, sh = key, ts_us, shard
-                if ones is None or len(ones) != len(ts_us):
-                    ones = np.ones(len(ts_us), dtype=np.float64)
-                v = ones
+                m, v = slice(None), np.ones(len(ts_us), dtype=np.float64)
             elif mid == 1:
-                k, t, v, sh = key, ts_us, tok, shard
+                m, v = slice(None), np.asarray(cols["tok"], dtype=np.float64)
             else:
                 m = role == mid
                 if not m.any():
                     continue
-                k, t = key[m], ts_us[m]
                 v = np.ones(int(m.sum()), dtype=np.float64)
-                sh = None if shard is None else shard[m]
-            mid_arr = np.full(len(t), mid, dtype=np.int64)
-            frames.append(_rollup_block_fast(
-                k, mid_arr, t, v, tiers_, kind, max_points, shard=sh))
-        return frames
+            k = key[m]
+            groups = rollup_groups(ts_us[m], v, _change_mask([k]), units,
+                                   max_points)
+            for tier, (s, aggs) in zip(tiers, groups):
+                # shard-tagged kind ("<p>|conv") for the resumable
+                # job's per-shard commit groups; shard is a function
+                # of conv_id == key, so it can't split a series group
+                kind_col = (kind if shard is None else np.char.add(
+                    np.char.add(shard[m][s].astype("U20"), "|"), kind))
+                frames.append(pd.DataFrame({
+                    "tier": tier, "kind": kind_col, "series_key": k[s],
+                    "metric": metric, **aggs}))
+        return pd.concat(frames, ignore_index=True)
 
-    def process(iterator):
-        buf = None
-        for pdf in iterator:
-            if len(pdf) == 0:
-                continue
-            buf = pdf if buf is None else pd.concat([buf, pdf],
-                                                    ignore_index=True)
-            key = buf["series_key"].to_numpy()
-            ts_us = buf["ts"].to_numpy().astype("datetime64[us]") \
-                .astype(np.int64)
-            day = ts_us - ts_us % coarsest
-            n = len(buf)
-            change = np.zeros(n, dtype=bool)
-            if n > 1:
-                change[1:] = (day[1:] != day[:-1]) | (key[1:] != key[:-1])
-            cuts = np.flatnonzero(change)
-            if len(cuts):
-                cut = int(cuts[-1])
-                role = buf["role_code"].to_numpy()
-                tok = buf["tok"].to_numpy(dtype=np.float64)
-                shard = (buf["shard"].to_numpy() if with_shard else None)
-                yield pd.concat(_metric_frames(
-                    key[:cut], ts_us[:cut], role[:cut], tok[:cut],
-                    None if shard is None else shard[:cut], tiers),
-                    ignore_index=True)
-                buf = buf.iloc[cut:].reset_index(drop=True)
-        if buf is not None and len(buf):
-            key = buf["series_key"].to_numpy()
-            ts_us = buf["ts"].to_numpy().astype("datetime64[us]") \
-                .astype(np.int64)
-            yield pd.concat(_metric_frames(
-                key, ts_us, buf["role_code"].to_numpy(),
-                buf["tok"].to_numpy(dtype=np.float64),
-                buf["shard"].to_numpy() if with_shard else None, tiers),
-                ignore_index=True)
-
-    return process
+    return _carry_fn(tiers, ["series_key"], block)
 
 
 def _tool_points_fast(turns: DataFrame) -> DataFrame:

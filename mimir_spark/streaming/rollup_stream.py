@@ -665,10 +665,7 @@ ROLLUP_CHUNK_SCHEMA = (
     "cnt long, sum_v double, min_v double, max_v double, last_v double, "
     "chunk binary"
 )
-_STATE_SCHEMA = ("ts array<bigint>, conv array<string>, tidx array<bigint>, "
-                 "v array<double>")
-
-#: sharded-state variant: ONE pickled columnar buffer per hash shard
+#: ONE pickled columnar buffer per hash shard
 _SHARD_STATE_SCHEMA = "buf binary"
 
 #: composite series separator inside the sharded buffer (same byte the
@@ -679,7 +676,7 @@ _SKEY_SEP = "\x1f"
 
 def _make_sharded_chunk_fn(unit_us: int):
     """Build the per-shard applyInPandasWithState handler for
-    _streaming_chunks_sharded. Module-level so the unit-level
+    streaming_rollup_chunks. Module-level so the unit-level
     differential test (test_streaming_unit.py) can drive it through a
     simulated GroupState across arbitrary batch/watermark sequences —
     coverage the end-to-end stream tests can't reach cheaply."""
@@ -688,7 +685,7 @@ def _make_sharded_chunk_fn(unit_us: int):
     import numpy as np
     import pandas as pd
 
-    from .. import codec
+    from ..rollup import _change_mask, rollup_groups
 
     _empty = (np.empty(0, dtype=object), np.empty(0, dtype=np.int64),
               np.empty(0, dtype=object), np.empty(0, dtype=np.int64),
@@ -705,8 +702,9 @@ def _make_sharded_chunk_fn(unit_us: int):
             if len(pdf) == 0:
                 continue
             t = pdf["ts_us"].to_numpy(dtype=np.int64)
-            # arrival-time late drop, same rule as the per-series
-            # writer: strictly older than the watermark is late
+            # arrival-time late drop, the built-in aggregation's rule:
+            # strictly older than the watermark is late (the batch
+            # cascade repairs the late tail at compaction time)
             on_time = t >= wm_us
             if not on_time.any():
                 continue
@@ -737,25 +735,14 @@ def _make_sharded_chunk_fn(unit_us: int):
         closed = (bucket + unit_us) <= wm_us
         out = None
         if closed.any():
-            cs, ct, cv, cb = (s_code[closed], ts[closed], v[closed],
-                              bucket[closed])
-            starts = np.flatnonzero(np.concatenate(
-                [[True], (cs[1:] != cs[:-1]) | (cb[1:] != cb[:-1])]))
-            ends = np.append(starts[1:], len(cb))
-            chunks = codec.encode_many(ct, cv, starts)
+            cs = s_code[closed]
+            (starts, aggs), = rollup_groups(ts[closed], v[closed],
+                                            _change_mask([cs]), [unit_us])
             series = pd.Series(s_uniq[cs[starts]]).str.split(
                 _SKEY_SEP, expand=True)
             out = pd.DataFrame({
                 "kind": series[0], "series_key": series[1],
-                "metric": series[2],
-                "bucket_ts": cb[starts].astype("datetime64[us]"),
-                "cnt": ends - starts,
-                "sum_v": np.add.reduceat(cv, starts),
-                "min_v": np.minimum.reduceat(cv, starts),
-                "max_v": np.maximum.reduceat(cv, starts),
-                "last_v": cv[ends - 1],
-                "chunk": chunks,
-            })
+                "metric": series[2], **aggs})
         keep = ~closed
         if keep.any():
             state.update((pickle.dumps(
@@ -772,36 +759,44 @@ def _make_sharded_chunk_fn(unit_us: int):
     return fn
 
 
-def _streaming_chunks_sharded(stream: DataFrame, tier: str,
-                              watermark: str, shards: int) -> DataFrame:
-    """Sharded-state body of streaming_rollup_chunks (shards=N).
+def streaming_rollup_chunks(stream: DataFrame, tier: str = "1m",
+                            watermark: str = "10 minutes",
+                            shards: int = 64) -> DataFrame:
+    """Custom STATEFUL streaming operator (applyInPandasWithState): the
+    streaming analogue of the one-pass chunk writer. State buffers the
+    open buckets' points; once the event-time watermark passes a
+    bucket's end, that bucket is emitted with the SAME aggregates and
+    the SAME Gorilla-encoded chunk the batch path produces (asserted
+    bit-for-bit in tests). Idle shards flush via event-time timeouts,
+    so emission doesn't require new data per key.
 
-    Why it exists: the per-series writer calls the Python state
-    handler once per OPEN SERIES per micro-batch — measured ~2.5k
-    turns/s on the rehearsal corpus (~500k open series), dominated by
-    per-group pandas/pickle work, not encode work (BENCH.md).
-    Grouping by ``pmod(xxhash64(series), shards)`` instead keeps one
-    columnar buffer per shard, so a micro-batch makes O(shards) handler
-    calls and every per-point step (sort, bucket close, aggregate,
-    Gorilla encode) is one vectorized numpy pass over the shard — the
-    same memtable-per-shard shape an LSM ingester uses. Either way a
+    This is the RAM-batch -> immutable-tail lifecycle of the reference
+    (MimirIndex.java:611-628: postings buffered in RAM, searchable at
+    sync-to-disk) with the watermark playing the flush timer.
+
+    State is grouped by ``pmod(xxhash64(series), shards)``: one
+    columnar buffer per hash shard, so a micro-batch makes O(shards)
+    handler calls whatever the number of open series, and every
+    per-point step (sort, bucket close, aggregate, Gorilla encode) is
+    one vectorized numpy pass over the shard (rollup.rollup_groups) —
+    the same memtable-per-shard shape an LSM ingester uses. A
     micro-batch runs 2 x (the stream's state partitions) Python worker
     invocations, a data pass plus a timeout pass per partition; the
     state partition count is ``spark.sql.shuffle.partitions``, fixed
     when the checkpoint is created. ``shards`` only sets how many
-    handler calls happen inside those invocations. Emitted rows
-    are identical to the per-series writer's (asserted bit-for-bit in
-    tests): intra-chunk point order is (ts, conv_id, turn_idx) via
-    integer lexsort over order-preserving np.unique codes.
+    handler calls happen inside those invocations. Intra-chunk point
+    order is (ts, conv_id, turn_idx) via integer lexsort over
+    order-preserving np.unique codes, the batch writer's order.
 
     State per shard is one pickled tuple of flat arrays (composite
     series key, ts_us, conv_id, turn_idx, v) holding only OPEN-bucket
     points; event-time timeouts flush idle shards when the watermark
-    passes their earliest open bucket end, exactly like the per-series
-    variant.
+    passes their earliest open bucket end.
     """
     from ..rollup import TIER_US
 
+    if shards < 1:
+        raise ValueError(f"shards must be >= 1, got {shards}")
     fn = _make_sharded_chunk_fn(TIER_US[tier])
     points = _deduped_points(stream, watermark).withColumn(
         "ts_us", F.unix_micros("ts")).withColumn(
@@ -813,126 +808,6 @@ def _streaming_chunks_sharded(stream: DataFrame, tier: str,
             fn,
             outputStructType=ROLLUP_CHUNK_SCHEMA,
             stateStructType=_SHARD_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf="EventTimeTimeout",
-        )
-    )
-
-
-def streaming_rollup_chunks(stream: DataFrame, tier: str = "1m",
-                            watermark: str = "10 minutes",
-                            shards: int | None = None) -> DataFrame:
-    """Custom STATEFUL streaming operator (applyInPandasWithState): the
-    streaming analogue of the one-pass chunk writer. Per-series state
-    buffers the open buckets' points; once the event-time watermark
-    passes a bucket's end, that bucket is emitted with the SAME
-    aggregates and the SAME Gorilla-encoded chunk the batch path
-    produces (asserted bit-for-bit in tests). Idle series flush via
-    event-time timeouts, so emission doesn't require new data per key.
-
-    This is the RAM-batch -> immutable-tail lifecycle of the reference
-    (MimirIndex.java:611-628: postings buffered in RAM, searchable at
-    sync-to-disk) with the watermark playing the flush timer.
-
-    ``shards``: None keeps one state row per series (the reference
-    shape; fine at moderate series cardinality). An integer switches
-    to the sharded-state writer — one columnar buffer per hash shard,
-    O(shards) handler calls per micro-batch instead of O(open series)
-    — the high-cardinality live-tail configuration
-    (_streaming_chunks_sharded; stream_job defaults to it). Output is
-    identical bit-for-bit either way. Python worker invocations per
-    micro-batch do not depend on ``shards``: they are 2 x the state
-    partitions (``spark.sql.shuffle.partitions`` when the checkpoint
-    was created), a data pass and a timeout pass.
-    """
-    if shards:
-        return _streaming_chunks_sharded(stream, tier, watermark, shards)
-    import numpy as np
-    import pandas as pd
-
-    from .. import codec
-    from ..rollup import TIER_US
-
-    unit_us = TIER_US[tier]
-
-    def fn(key, pdf_iter, state):
-        # restore buffered open points
-        if state.exists:
-            ts_l, conv_l, tidx_l, v_l = (list(x) for x in state.get)
-        else:
-            ts_l, conv_l, tidx_l, v_l = [], [], [], []
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        for pdf in pdf_iter:
-            if len(pdf) == 0:
-                continue
-            # epoch micros computed JVM-side (unix_micros) — immune to
-            # pandas/session timezone rendering of the ts column
-            ts_new = pdf["ts_us"].astype("int64")
-            # drop late-beyond-watermark rows at arrival (the built-in
-            # aggregation's rule: strictly older than the watermark is
-            # late, ts == watermark is on time); the batch cascade
-            # repairs the late tail at compaction time, as in the
-            # reference's LSM merge. Buffered rows are never late: they
-            # were on time at arrival, and an on-time row's bucket is
-            # open by definition (bucket end > ts >= watermark)
-            on_time = ts_new.to_numpy() >= wm_us
-            ts_l.extend(ts_new[on_time].tolist())
-            conv_l.extend(pdf["conv_id"][on_time].tolist())
-            tidx_l.extend(int(x) for x in pdf["turn_idx"][on_time])
-            v_l.extend(float(x) for x in pdf["v"][on_time])
-        if ts_l:
-            order = sorted(range(len(ts_l)),
-                           key=lambda i: (ts_l[i], conv_l[i], tidx_l[i]))
-            ts = np.array([ts_l[i] for i in order], dtype=np.int64)
-            conv = [conv_l[i] for i in order]
-            tidx = [tidx_l[i] for i in order]
-            v = np.array([v_l[i] for i in order], dtype=np.float64)
-            bucket = ts - ts % unit_us
-            closed = (bucket + unit_us) <= wm_us
-            rows = []
-            if closed.any():
-                cts, cv, cb = ts[closed], v[closed], bucket[closed]
-                starts = np.flatnonzero(
-                    np.concatenate([[True], cb[1:] != cb[:-1]]))
-                ends = np.append(starts[1:], len(cb))
-                chunks = codec.encode_many(cts, cv, starts)
-                for s, e, ch in zip(starts, ends, chunks):
-                    rows.append((
-                        key[0], key[1], key[2],
-                        np.int64(cb[s]).astype("datetime64[us]"),
-                        int(e - s), float(np.sum(cv[s:e])),
-                        float(np.min(cv[s:e])), float(np.max(cv[s:e])),
-                        float(cv[e - 1]), ch,
-                    ))
-            keep = ~closed
-            if keep.any():
-                state.update((
-                    ts[keep].tolist(),
-                    [c for c, k in zip(conv, keep) if k],
-                    [t for t, k in zip(tidx, keep) if k],
-                    v[keep].tolist(),
-                ))
-                # flush idle series when the watermark passes the
-                # earliest open bucket (must be > current watermark)
-                open_ends = bucket[keep] + unit_us
-                state.setTimeoutTimestamp(int(open_ends.min()) // 1000)
-            else:
-                state.remove()
-            if rows:
-                yield pd.DataFrame(rows, columns=[
-                    "kind", "series_key", "metric", "bucket_ts", "cnt",
-                    "sum_v", "min_v", "max_v", "last_v", "chunk"])
-        else:
-            state.remove()
-
-    points = _deduped_points(stream, watermark).withColumn(
-        "ts_us", F.unix_micros("ts"))
-    return (
-        points.groupBy("kind", "series_key", "metric")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=ROLLUP_CHUNK_SCHEMA,
-            stateStructType=_STATE_SCHEMA,
             outputMode="append",
             timeoutConf="EventTimeTimeout",
         )

@@ -255,6 +255,7 @@ def test_cli_fast_fail_validation(tmp_path):
     hours of preceding work would waste the whole run."""
     import compact_job
     import rollup_job
+    import stream_job
 
     # --distinct-sketch: unknown tier / missing colon / empty column /
     # tier mapped to two columns / tier listed twice
@@ -274,6 +275,13 @@ def test_cli_fast_fail_validation(tmp_path):
                  ["--store", "s", "--retain", "1m:30d"]]:
         with pytest.raises(SystemExit) as e:
             compact_job.main(argv)
+        assert e.value.code == 2
+
+    # stream_job: the stateful writer needs at least one state shard
+    for n in ["0", "-3"]:
+        with pytest.raises(SystemExit) as e:
+            stream_job.main(["--source", "src", "--store", "s",
+                             "--state-shards", n])
         assert e.value.code == 2
 
 

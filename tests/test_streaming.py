@@ -161,13 +161,12 @@ def ordered_stream_dir(t_small, stream_dir):
     return d
 
 
-@pytest.mark.parametrize("shards", [None, 4])
+@pytest.mark.parametrize("shards", [4])
 def test_streaming_chunks_match_batch(spark, t_small_df, ordered_stream_dir,
                                       shards):
     """The stateful chunk writer (applyInPandasWithState) must emit the
     SAME Gorilla chunks as the batch one-pass writer, bit-for-bit, for
-    every bucket it closes — in BOTH state layouts (per-series and
-    sharded columnar buffers)."""
+    every bucket it closes."""
     import numpy as np
 
     from mimir_spark import codec
@@ -182,12 +181,12 @@ def test_streaming_chunks_match_batch(spark, t_small_df, ordered_stream_dir,
     q = (
         streaming_rollup_chunks(stream, tier="1h", shards=shards)
         .writeStream.outputMode("append")
-        .format("memory").queryName(f"schunks_{shards or 0}")
+        .format("memory").queryName(f"schunks_{shards}")
         .start()
     )
     try:
         q.processAllAvailable()
-        got = spark.sql(f"SELECT * FROM schunks_{shards or 0}").toPandas()
+        got = spark.sql(f"SELECT * FROM schunks_{shards}").toPandas()
     finally:
         q.stop()
 
