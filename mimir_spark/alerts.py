@@ -515,6 +515,22 @@ def run_alert_job(spark: SparkSession, store, rules: list[AlertRule],
     changed rule definition (fingerprint) or an explicit ``t0``
     forces a full rebuild. Returns per-rule stats for the CLI
     report."""
+    # a stale --t1 behind a ledger's high-water mark would rebuild
+    # truncated history and silently discard recorded episodes after
+    # t1; refuse instead (recording.py guards its high-water mark the
+    # same way). Every rule is checked before any is evaluated, so a
+    # refused job writes nothing rather than half its rules.
+    for rule in rules:
+        meta = ledger.meta(rule.name) or {}
+        prev_until = meta.get("evaluated_until_us")
+        if (meta.get("fingerprint") == rule.fingerprint()
+                and prev_until is not None
+                and _floor_step_us(t1, rule.step_us()) < prev_until):
+            raise ValueError(
+                f"rule {rule.name!r}: t1={t1!r} is before the ledger's "
+                f"evaluated_until ({_ts_str(prev_until)}); refusing to "
+                "regress the high-water mark — pass a t1 at or after "
+                "it (or change the rule to force a rebuild)")
     report: dict[str, dict] = {}
     for rule in rules:
         step_us = rule.step_us()
@@ -527,16 +543,6 @@ def run_alert_job(spark: SparkSession, store, rules: list[AlertRule],
         # whose directory vanished (crash between the ledger swap's
         # renames) must trigger a full-history rebuild, never an
         # incremental resume over missing episodes
-        if (same_rule and prev_until is not None and t1_us < prev_until):
-            # a stale --t1 behind the ledger's high-water mark would
-            # rebuild truncated history and silently discard recorded
-            # episodes after t1; refuse instead (recording.py guards
-            # its high-water mark the same way)
-            raise ValueError(
-                f"rule {rule.name!r}: t1={t1!r} is before the ledger's "
-                f"evaluated_until ({_ts_str(prev_until)}); refusing to "
-                "regress the high-water mark — pass a t1 at or after "
-                "it (or change the rule to force a rebuild)")
         incremental = (rule.incremental() and same_rule and t0 is None
                        and old is not None and prev_until is not None
                        and prev_until <= t1_us)

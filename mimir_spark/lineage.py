@@ -19,6 +19,7 @@ readable, and every write is an atomic directory replace.
 
 from __future__ import annotations
 
+import os
 import shutil
 import time
 from pathlib import Path
@@ -57,30 +58,30 @@ def _cluster_for_store(df: DataFrame, partition_cols: list[str]) -> DataFrame:
         .sortWithinPartitions(*partition_cols, *cols)
 
 
-#: Write-side shard count for the auxiliary (sketch/histogram) tiers:
-#: their directory layout has no ``p=`` level (readers filter on
-#: kind/metric/series, never on a shard id), but writing ONE task per
-#: bucket_date leaf is the r5 verdict's write-path scale-killer — a
-#: day of 1m histogram bins across every series is a multi-GB single
-#: reducer at 100x scale. Sharding the repartition key by
-#: hash(series) % P keeps the atomic per-date-dir swap/ledger
-#: machinery byte-compatible while writing each leaf with P parallel
-#: tasks / P series-sorted files (row-group stats prune within each
-#: file exactly as before). Local default 8 matches the aggregate
-#: tiers' num_partitions; size it to cluster reducer capacity via
-#: SPARK_GRAFT_AUX_SHARDS in production.
-import os as _os
-
-AUX_SHARDS = int(_os.environ.get("SPARK_GRAFT_AUX_SHARDS", "8"))
+def aux_shards() -> int:
+    """Write-side shard count P for the auxiliary (sketch/histogram)
+    tiers: their directory layout has no ``p=`` level (readers filter
+    on kind/metric/series, never on a shard id), but writing ONE task
+    per bucket_date leaf is the r5 verdict's write-path scale-killer —
+    a day of 1m histogram bins across every series is a multi-GB
+    single reducer at 100x scale. Sharding the repartition key by
+    hash(series) % P keeps the atomic per-date-dir swap/ledger
+    machinery byte-compatible while writing each leaf with P parallel
+    tasks / P series-sorted files (row-group stats prune within each
+    file exactly as before). Local default 8 matches the aggregate
+    tiers' num_partitions; size it to cluster reducer capacity via
+    SPARK_GRAFT_AUX_SHARDS in production. Read at each write, not at
+    import, so a value set after import takes effect."""
+    return int(os.environ.get("SPARK_GRAFT_AUX_SHARDS", "8"))
 
 
 def _aux_shard_col():
-    return F.pmod(F.xxhash64("kind", "series_key"), F.lit(AUX_SHARDS))
+    return F.pmod(F.xxhash64("kind", "series_key"), F.lit(aux_shards()))
 
 
 def _cluster_for_aux(df: DataFrame) -> DataFrame:
     """Aux-tier variant of ``_cluster_for_store``: up to P write tasks
-    per bucket_date leaf instead of one (see AUX_SHARDS).
+    per bucket_date leaf instead of one (see aux_shards).
 
     Key-cardinality trade, deliberate: hashing (date, shard mod P)
     keeps files-per-leaf <= P (a shard's rows can merge with another
@@ -135,7 +136,7 @@ class TieredStore:
         """Shared auxiliary-tier (sketch / histogram) writer:
         date-partitioned like the aggregate tiers (same O(metadata)
         expiry via the shared layout), atomically swapped into place,
-        AUX_SHARDS series-sorted files per date leaf written by as
+        aux_shards() series-sorted files per date leaf written by as
         many parallel tasks (_cluster_for_aux — the r6 fix for the
         single-reducer-per-date write bottleneck)."""
         tmp = out.with_name(out.name + ".tmp")

@@ -44,6 +44,13 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        # one C1 + one C2 JIT thread instead of JDK 17's 1 + 2 on 4
+        # cores: in these short-lived JVMs the C2 queue never drains,
+        # and compiling took about half the CPU of a live-tail
+        # micro-batch, competing with the task slots. Hot code still
+        # reaches C2. defaultJavaOptions, so a caller's
+        # extraJavaOptions adds to the flag instead of replacing it.
+        .config("spark.driver.defaultJavaOptions", "-XX:CICompilerCount=2")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.filterPushdown", "true")
         # zstd parquet output (guide §6): ~38% smaller than snappy on

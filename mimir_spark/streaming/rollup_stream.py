@@ -417,6 +417,8 @@ def _mergeable_store_sink(store, app_id: str, *, root, metrics_dir,
     import json
     import shutil
 
+    from ..lineage import aux_shards
+
     entry = None  # set per batch: f"{app_id}/{batch_id}"
 
     def _load_ledger(led) -> list:
@@ -501,7 +503,7 @@ def _mergeable_store_sink(store, app_id: str, *, root, metrics_dir,
                 staged = root / f".stage-{d}-{app_id}-{batch_key}"
                 if staged.exists():
                     shutil.rmtree(staged)
-                # AUX_SHARDS parallel writers per date dir, not one:
+                # aux_shards() parallel writers per date dir, not one:
                 # the merge rewrites the WHOLE date partition, which
                 # at conv granularity is the r5 verdict's multi-GB
                 # single reducer. Partitioning on the full-cardinality
@@ -509,8 +511,7 @@ def _mergeable_store_sink(store, app_id: str, *, root, metrics_dir,
                 # values hashed into 8 partitions would collide, guide
                 # §2.5) spreads evenly; each file stays series-sorted
                 # so row-group stats prune exactly as before.
-                from ..lineage import AUX_SHARDS
-                merged.repartition(AUX_SHARDS,
+                merged.repartition(aux_shards(),
                                    F.xxhash64("kind", "series_key")) \
                     .sortWithinPartitions(
                         "kind", "series_key", "metric", "bucket_ts") \

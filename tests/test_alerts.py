@@ -594,3 +594,25 @@ def test_changed_zscore_rule_rebuild_covers_full_history(
     rep = run_alert_job(spark, store, [changed], ledger, t1=T1, t0=t0)
     assert rep["r"]["mode"] == "full"
     assert_episodes_equal(_ledger_frame(spark, ledger, "r"), full)
+
+
+def test_stale_rule_refuses_the_whole_job_before_writing(
+        spark, store, tmp_path):
+    """One stale rule in a multi-rule job must refuse the job before
+    any rule is evaluated: a rule earlier in the list must not commit
+    its ledger while a later one raises."""
+    fresh, stale = _rule(name="fresh"), _rule(name="stale")
+    ledger = AlertLedger(tmp_path / "led")
+    run_alert_job(spark, store, [fresh], ledger, t1="2026-01-07")
+    run_alert_job(spark, store, [stale], ledger, t1=T1)
+
+    def snapshot():
+        files = [ledger._meta_path(fresh.name),
+                 *sorted(ledger.rule_dir(fresh.name).rglob("*"))]
+        return {str(p): p.read_bytes() for p in files if p.is_file()}
+
+    before = snapshot()
+    with pytest.raises(ValueError, match="'stale'.*high-water"):
+        run_alert_job(spark, store, [fresh, stale], ledger,
+                      t1="2026-02-01")
+    assert snapshot() == before

@@ -121,23 +121,11 @@ def test_aux_tier_write_is_sharded(spark, t_small_df, tmp_path):
     coalescing still merges small leaves (scale-adaptive), so the
     fan-out is asserted with coalescing off, and the read-back must
     stay identical either way."""
-    from mimir_spark.ingest import ingest, turn_metrics
     from mimir_spark.lineage import TieredStore
-    from mimir_spark.rollup import rollup_distinct_sketch
 
-    points = turn_metrics(ingest(t_small_df))
-    sk = rollup_distinct_sketch(points, "1h")
+    sk = _sketch_1h(t_small_df)
     store = TieredStore(tmp_path / "store")
-    key = "spark.sql.adaptive.coalescePartitions.enabled"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, "false")
-    try:
-        store.write_sketch_tier(sk, "1h")
-    finally:
-        spark.conf.set(key, prev)
-    date_dirs = sorted((tmp_path / "store" / "sketch=1h").glob("bucket_date=*"))
-    assert date_dirs, "no date leaves written"
-    files_per_leaf = [len(list(d.glob("*.parquet"))) for d in date_dirs]
+    files_per_leaf = _sketch_files_per_leaf(spark, store, sk)
     assert max(files_per_leaf) > 1, files_per_leaf
     back = store.read_sketch_tier(spark, "1h") \
         .select("kind", "series_key", "metric", "bucket_ts", "cnt",
@@ -146,6 +134,43 @@ def test_aux_tier_write_is_sharded(spark, t_small_df, tmp_path):
                     "n_distinct")
     assert back.exceptAll(ref).count() == 0
     assert ref.exceptAll(back).count() == 0
+
+
+def test_aux_shards_read_at_write_time(spark, t_small_df, tmp_path,
+                                       monkeypatch):
+    """SPARK_GRAFT_AUX_SHARDS set after the engine is imported still
+    sets the files per aux-tier date leaf."""
+    from mimir_spark.lineage import TieredStore
+
+    sk = _sketch_1h(t_small_df)
+    monkeypatch.setenv("SPARK_GRAFT_AUX_SHARDS", "1")
+    one = _sketch_files_per_leaf(spark, TieredStore(tmp_path / "one"), sk)
+    assert one and set(one) == {1}, one
+    monkeypatch.delenv("SPARK_GRAFT_AUX_SHARDS")
+    dflt = _sketch_files_per_leaf(spark, TieredStore(tmp_path / "d"), sk)
+    assert max(dflt) > 1 and max(dflt) <= 8, dflt
+
+
+def _sketch_1h(t_small_df):
+    from mimir_spark.ingest import ingest, turn_metrics
+    from mimir_spark.rollup import rollup_distinct_sketch
+
+    return rollup_distinct_sketch(turn_metrics(ingest(t_small_df)), "1h")
+
+
+def _sketch_files_per_leaf(spark, store, sk) -> list[int]:
+    """Write ``sk`` as the 1h sketch tier with AQE coalescing off (it
+    merges small leaves' shards) and count the files in each leaf."""
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        store.write_sketch_tier(sk, "1h")
+    finally:
+        spark.conf.set(key, prev)
+    date_dirs = sorted(store.sketch_dir("1h").glob("bucket_date=*"))
+    assert date_dirs, "no date leaves written"
+    return [len(list(d.glob("*.parquet"))) for d in date_dirs]
 
 
 def test_tool_points_fast_matches_turn_metrics(spark, t_small_df):
