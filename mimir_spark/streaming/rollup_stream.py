@@ -560,14 +560,30 @@ def chunk_store_sink(store, tier: str, app_id: str = "stream",
     partials are associative), and nothing keys on which shard a
     series lives in.
 
+    One Spark action per micro-batch: the batch is shaped in Spark
+    (instant ``bucket_ts``, shard ``p``, ``bucket_date``) and collected
+    once with ``toArrow``; the driver then sorts it, computes the
+    per-date metrics and writes the files with pyarrow. A Spark write
+    would add a stats job plus a write job per date, whose fixed cost
+    (tasks, codegen, the JIT they keep busy) dwarfs the few thousand
+    rows a live-tail batch emits. The collected rows are the batch's
+    emitted closed buckets — one per (series, bucket) whose end the
+    watermark passed this batch — so the driver holds O(batch), the
+    rows the stateful operator just emitted; spark.driver.maxResultSize
+    caps them.
+    The files match the Spark writer's shape: INT96 ``bucket_ts``, all
+    columns optional, the session's parquet codec (zstd at level 3,
+    parquet-mr's default), rows in ``_STORE_SORT_STREAM`` order.
+
     Exactly-once under at-least-once retries WITHOUT read-modify-
     write: a closed bucket is emitted exactly once by the stateful
     operator, so the sink only ever APPENDS — each (date, batch)
     lands as one deterministically-named file per shard
     (``stream-{app_id}-{batch_id}.parquet``), making a replayed move
-    overwrite itself, and the per-date ledger (in a ``_streaming``
-    sidecar, invisible to readers) commits last. Crash anywhere →
-    retry redoes idempotent file moves and re-commits the ledger.
+    overwrite itself. Per date the commit order is files, then the
+    metrics sidecar line, then the ledger (in a ``_streaming``
+    sidecar, invisible to readers). Crash anywhere → retry redoes
+    idempotent file moves and re-commits the ledger.
 
     Ownership contract: the batch job's whole-shard replace is the
     source of truth — a nightly job whose raw table covers the
@@ -578,11 +594,18 @@ def chunk_store_sink(store, tier: str, app_id: str = "stream",
     import os
     import shutil
 
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
     series_id = F.concat_ws("\x1f", F.col("kind"), F.col("series_key"))
     cols = ["kind", "series_key", "metric", "bucket_ts", "cnt",
             "sum_v", "min_v", "max_v", "last_v", "chunk"]
+    order = [(c, "ascending")
+             for c in ("bucket_date", "p", *_STORE_SORT_STREAM)]
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
+        codec = _arrow_parquet_codec(batch_df.sparkSession)
         entry = f"{app_id}/{batch_id}"
         ledger_dir = store.root / "_streaming" / f"tier={tier}"
         new = (
@@ -595,64 +618,75 @@ def chunk_store_sink(store, tier: str, app_id: str = "stream",
                                     F.lit(num_partitions)))
             .withColumn("bucket_date", F.to_date("bucket_ts"))
             .select("p", "bucket_date", *cols)
-        ).persist()
-        try:
-            # one tiny agg per batch: the per-date lineage metrics the
-            # batch job records per partition (rows in, points out,
-            # bytes compressed), keyed (app, batch, date)
-            stats = {str(r["bucket_date"]): {
-                         "rows": r["rows"], "points": r["points"],
-                         "chunk_bytes": r["chunk_bytes"]}
-                     for r in new.groupBy("bucket_date").agg(
-                         F.count("*").alias("rows"),
-                         F.sum("cnt").alias("points"),
-                         F.sum(F.octet_length("chunk"))
-                         .alias("chunk_bytes")).collect()}
-            dates = sorted(stats)
-            if not dates:
-                return
-            ledger_dir.mkdir(parents=True, exist_ok=True)
-            for d in dates:
-                led = ledger_dir / f"bucket_date={d}.json"
-                applied = ([f"{app_id}/{e}" if isinstance(e, int) else e
-                            for e in json.loads(led.read_text())]
-                           if led.exists() else [])
-                if entry in applied:
-                    continue
-                staged = store.root / "_streaming" / \
-                    f".stage-{tier}-{d}-{app_id}-{batch_id}"
-                if staged.exists():
-                    shutil.rmtree(staged)
-                part = new.filter(F.col("bucket_date") == d) \
-                    .drop("bucket_date")
-                (
-                    part.repartition("p")
-                    .sortWithinPartitions("p", *_STORE_SORT_STREAM)
-                    .write.mode("overwrite").partitionBy("p")
-                    .parquet(str(staged))
-                )
-                fname = f"stream-{app_id}-{batch_id}.parquet"
-                for pdir in sorted(staged.glob("p=*")):
-                    files = sorted(pdir.glob("*.parquet"))
-                    if not files:
-                        continue
-                    leaf = (store.tier_dir(tier) / pdir.name
-                            / f"bucket_date={d}")
-                    leaf.mkdir(parents=True, exist_ok=True)
-                    if len(files) == 1:
-                        os.replace(files[0], leaf / fname)
-                    else:  # repartition("p") gives one file per shard,
-                        # but never rely on it: suffix extras stably
-                        for i, f in enumerate(files):
-                            os.replace(f, leaf / f"{fname}.{i}")
-                shutil.rmtree(staged, ignore_errors=True)
-                _append_stream_metrics(ledger_dir, app_id, batch_id, d,
-                                       stats[d])
-                led.write_text(json.dumps(applied + [entry]))
-        finally:
-            new.unpersist()
+        ).toArrow()
+        if new.num_rows == 0:
+            return
+        # Arrow sorts strings by bytes, as Spark does; nulls first too
+        new = new.take(pc.sort_indices(new, sort_keys=order,
+                                       null_placement="at_start"))
+        # Spark writes every column optional
+        schema = pa.schema([new.schema.field(c).with_nullable(True)
+                            for c in cols])
+        fname = f"stream-{app_id}-{batch_id}.parquet"
+        ledger_dir.mkdir(parents=True, exist_ok=True)
+        for day in pc.unique(new["bucket_date"]).to_pylist():
+            d = str(day)
+            led = ledger_dir / f"bucket_date={d}.json"
+            applied = ([f"{app_id}/{e}" if isinstance(e, int) else e
+                        for e in json.loads(led.read_text())]
+                       if led.exists() else [])
+            if entry in applied:
+                continue
+            part = new.filter(pc.equal(new["bucket_date"], day))
+            staged = store.root / "_streaming" / \
+                f".stage-{tier}-{d}-{app_id}-{batch_id}"
+            if staged.exists():
+                shutil.rmtree(staged)
+            staged.mkdir(parents=True)
+            for p in pc.unique(part["p"]).to_pylist():
+                tmp = staged / f"p={p}.parquet"
+                pq.write_table(
+                    part.filter(pc.equal(part["p"], p))
+                    .select(cols).cast(schema), tmp,
+                    use_deprecated_int96_timestamps=True,
+                    store_schema=False, **codec)
+                leaf = store.tier_dir(tier) / f"p={p}" / f"bucket_date={d}"
+                leaf.mkdir(parents=True, exist_ok=True)
+                os.replace(tmp, leaf / fname)
+            shutil.rmtree(staged, ignore_errors=True)
+            # the per-date lineage metrics the batch job records per
+            # partition (rows in, points out, bytes compressed)
+            _append_stream_metrics(ledger_dir, app_id, batch_id, d, {
+                "rows": part.num_rows,
+                "points": pc.sum(part["cnt"]).as_py(),
+                "chunk_bytes":
+                    pc.sum(pc.binary_length(part["chunk"])).as_py()})
+            led.write_text(json.dumps(applied + [entry]))
 
     return write
+
+
+#: spark.sql.parquet.compression.codec -> pyarrow codec name; pyarrow
+#: writes neither lzo nor lz4_raw
+_ARROW_CODECS = {"none": "none", "uncompressed": "none",
+                 "snappy": "snappy", "gzip": "gzip", "brotli": "brotli",
+                 "lz4": "lz4", "zstd": "zstd"}
+
+
+def _arrow_parquet_codec(spark) -> dict:
+    """pq.write_table compression arguments for the session's parquet
+    codec. zstd gets parquet-mr's default level 3 (pyarrow's default,
+    1, writes larger files than Spark); other codecs take no level."""
+    name = spark.conf.get("spark.sql.parquet.compression.codec",
+                          "snappy").lower()
+    if name not in _ARROW_CODECS:
+        raise ValueError(
+            f"chunk_store_sink cannot write parquet codec {name!r}; "
+            f"set spark.sql.parquet.compression.codec to one of "
+            f"{sorted(_ARROW_CODECS)}")
+    if name == "zstd":
+        return {"compression": "zstd", "compression_level": 3}
+    return {"compression": _ARROW_CODECS[name]}
 
 
 #: chunk-sink file row order — same clustering as the batch store

@@ -690,6 +690,261 @@ def test_chunk_store_sink_end_to_end(spark, t_small_df, stream_dir,
     assert pts_1d == pts_1h > 0
 
 
+def _chunk_batch(spark):
+    """A static micro-batch shaped like streaming_rollup_chunks output:
+    two bucket dates, series spread over several of 4 shards, rows
+    shuffled, keys whose byte order differs from case/locale order."""
+    import numpy as np
+
+    from mimir_spark.streaming.rollup_stream import ROLLUP_CHUNK_SCHEMA
+
+    rng = np.random.default_rng(11)
+    series = [("conv", k) for k in ("c-01", "C-02", "c-é03", "c-z4",
+                                    "c-05", "c-06")] + \
+        [("tool", k) for k in ("search", "Shell", "éditeur", "zip")]
+    buckets = pd.date_range("2026-01-05 22:00", periods=4, freq="1h")
+    rows = [(kind, key, metric, ts) for kind, key in series
+            for metric in ("turn_rate", "token_volume") for ts in buckets]
+    order = rng.permutation(len(rows))
+    n = len(rows)
+    cnt = rng.integers(1, 40, n)
+    pdf = pd.DataFrame({
+        "kind": [rows[i][0] for i in order],
+        "series_key": [rows[i][1] for i in order],
+        "metric": [rows[i][2] for i in order],
+        "bucket_ts": [rows[i][3] for i in order],
+        "cnt": cnt, "sum_v": cnt * 2.5, "min_v": rng.random(n),
+        "max_v": 1.0 + rng.random(n), "last_v": rng.random(n),
+        "chunk": [rng.bytes(int(k)) for k in rng.integers(8, 90, n)],
+    })
+    return spark.createDataFrame(pdf, schema=ROLLUP_CHUNK_SCHEMA)
+
+
+def _stream_files(store) -> dict:
+    """relative path -> rows of every streamed chunk file in a store"""
+    import pyarrow.parquet as pq
+
+    return {str(f.relative_to(store.root)): pq.read_table(f).to_pylist()
+            for f in sorted(store.tier_dir("1h").rglob("stream-*"))}
+
+
+def test_chunk_sink_runs_one_spark_job_per_batch(spark, tmp_path):
+    """The sink's only Spark action is the batch's Arrow collect: no
+    stats job, no per-date write job."""
+    from mimir_spark.lineage import TieredStore
+    from mimir_spark.streaming.rollup_stream import chunk_store_sink
+
+    batch = _chunk_batch(spark)
+    sink = chunk_store_sink(TieredStore(tmp_path / "s"), "1h",
+                            num_partitions=4)
+    sc = spark.sparkContext
+    group = f"chunk-sink-jobs-{tmp_path.name}"
+    sc.setJobGroup(group, "chunk_store_sink")
+    try:
+        sink(batch, 0)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+
+def test_chunk_sink_files_match_spark_writer(spark, tmp_path):
+    """The driver-side Arrow write lands what the Spark writer
+    (repartition("p").sortWithinPartitions(...).write.partitionBy("p")
+    per date) lands: one file per (p, date) leaf, the same rows in the
+    same order, the same parquet column types (INT96 bucket_ts), the
+    same metrics sidecar line and ledger entry."""
+    import json
+
+    import pyarrow.parquet as pq
+
+    from mimir_spark.lineage import TieredStore
+    from mimir_spark.streaming.rollup_stream import (
+        _NTZ_TO_INSTANT, _STORE_SORT_STREAM, chunk_store_sink)
+
+    batch = _chunk_batch(spark)
+    store = TieredStore(tmp_path / "s")
+    chunk_store_sink(store, "1h", app_id="app", num_partitions=4)(batch, 7)
+
+    shaped = (
+        batch.withColumn("bucket_ts", F.expr(_NTZ_TO_INSTANT))
+        .withColumn("p", F.pmod(F.xxhash64(F.concat_ws(
+            "\x1f", "kind", "series_key")), F.lit(4)))
+        .withColumn("bucket_date", F.to_date("bucket_ts")))
+    stats = {str(r["bucket_date"]): r.asDict() for r in
+             shaped.groupBy("bucket_date").agg(
+                 F.count("*").alias("rows"),
+                 F.sum("cnt").alias("points"),
+                 F.sum(F.octet_length("chunk")).alias("chunk_bytes"))
+             .collect()}
+    dates = sorted(stats)
+    assert len(dates) == 2
+    ref = tmp_path / "ref"
+    for d in dates:
+        (shaped.filter(F.col("bucket_date") == d).drop("bucket_date")
+         .repartition("p").sortWithinPartitions("p", *_STORE_SORT_STREAM)
+         .write.mode("overwrite").partitionBy("p")
+         .parquet(str(ref / d)))
+
+    n_leaves = 0
+    for d in dates:
+        pdirs = sorted((ref / d).glob("p=*"))
+        assert len(pdirs) > 1, "the batch must span several shards"
+        for pdir in pdirs:
+            (want,) = pdir.glob("*.parquet")
+            leaf = store.tier_dir("1h") / pdir.name / f"bucket_date={d}"
+            assert [f.name for f in leaf.iterdir()] == \
+                ["stream-app-7.parquet"]
+            got = leaf / "stream-app-7.parquet"
+            assert pq.read_table(got).to_pylist() == \
+                pq.read_table(want).to_pylist()
+            gs, ws = pq.ParquetFile(got).schema, pq.ParquetFile(want).schema
+            assert gs.names == ws.names
+            for i in range(len(gs)):
+                g, w = gs.column(i), ws.column(i)
+                assert (g.physical_type, str(g.logical_type),
+                        g.max_definition_level) == \
+                    (w.physical_type, str(w.logical_type),
+                     w.max_definition_level), g.name
+            assert gs.column(gs.names.index("bucket_ts")).physical_type \
+                == "INT96"
+            n_leaves += 1
+    assert len(list(store.tier_dir("1h").rglob("*.parquet"))) == n_leaves
+
+    led_dir = store.root / "_streaming" / "tier=1h"
+    assert (led_dir / "metrics.jsonl").read_text().splitlines() == [
+        json.dumps({"app": "app", "batch": 7, "date": d,
+                    **{k: stats[d][k]
+                       for k in ("rows", "points", "chunk_bytes")}})
+        for d in dates]
+    for d in dates:
+        assert json.loads((led_dir / f"bucket_date={d}.json")
+                          .read_text()) == ["app/7"]
+
+
+def test_chunk_sink_codec_follows_session(spark, tmp_path):
+    """Files carry the session's parquet codec; a codec pyarrow cannot
+    write fails before any file or ledger lands."""
+    import pyarrow.parquet as pq
+
+    from mimir_spark.lineage import TieredStore
+    from mimir_spark.streaming.rollup_stream import chunk_store_sink
+
+    batch = _chunk_batch(spark)
+    key = "spark.sql.parquet.compression.codec"
+    prev = spark.conf.get(key)
+
+    def codecs(store) -> set:
+        out = set()
+        for f in store.tier_dir("1h").rglob("stream-*"):
+            md = pq.ParquetFile(f).metadata
+            out |= {md.row_group(g).column(c).compression
+                    for g in range(md.num_row_groups)
+                    for c in range(md.num_columns)}
+        return out
+
+    try:
+        for conf, want in (("zstd", {"ZSTD"}), ("snappy", {"SNAPPY"})):
+            spark.conf.set(key, conf)
+            store = TieredStore(tmp_path / conf)
+            chunk_store_sink(store, "1h", num_partitions=4)(batch, 0)
+            assert codecs(store) == want
+        spark.conf.set(key, "lzo")
+        store = TieredStore(tmp_path / "lzo")
+        with pytest.raises(ValueError, match="lzo"):
+            chunk_store_sink(store, "1h", num_partitions=4)(batch, 0)
+        assert not store.root.exists()
+    finally:
+        spark.conf.set(key, prev)
+
+
+def test_chunk_sink_mixed_leaf_reads_one_schema(spark, t_small_df,
+                                                tmp_path):
+    """A leaf holding a batch-job file and a streamed file reads under
+    one schema through read_tier, and both carry the same instants, in
+    UTC and in a non-UTC session time zone."""
+    from mimir_spark.lineage import TieredStore, run_rollup_job
+    from mimir_spark.streaming.rollup_stream import chunk_store_sink
+
+    store = TieredStore(tmp_path / "mixed")
+    run_rollup_job(spark, lambda: t_small_df, store, "night",
+                   num_partitions=2, tiers=("1h",))
+    batch_schema = store.read_tier(spark, "1h").schema
+    cols = ["kind", "series_key", "metric", "bucket_ts", "cnt", "sum_v",
+            "min_v", "max_v", "last_v", "chunk"]
+    # replay the batch rows as a streamed micro-batch (tz-naive UTC
+    # bucket_ts, as streaming_rollup_chunks emits them)
+    replay = store.read_tier(spark, "1h").select(*cols).withColumn(
+        "bucket_ts", F.expr("cast(bucket_ts as timestamp_ntz)"))
+    chunk_store_sink(store, "1h", num_partitions=2)(replay, 0)
+    mixed = [leaf for leaf in store.tier_dir("1h").glob("p=*/bucket_date=*")
+             if any(leaf.glob("stream-*"))
+             and any(f.name.startswith("part-") for f in leaf.iterdir())]
+    assert mixed, "some leaf must hold both a batch and a streamed file"
+
+    tz_key = "spark.sql.session.timeZone"
+    prev = spark.conf.get(tz_key)
+    try:
+        for tz in ("UTC", "America/New_York"):
+            spark.conf.set(tz_key, tz)
+            df = store.read_tier(spark, "1h")
+            assert df.schema == batch_schema
+            rows = df.withColumn("bucket_us", F.unix_micros("bucket_ts")) \
+                .withColumn("streamed", F.input_file_name()
+                            .contains("stream-")) \
+                .select("streamed", "bucket_us",
+                        *[c for c in cols if c != "bucket_ts"]) \
+                .toPandas()
+            key = ["kind", "series_key", "metric", "bucket_us"]
+            parts = [rows[rows["streamed"] == s].drop(columns="streamed")
+                     .sort_values(key, kind="mergesort")
+                     .reset_index(drop=True) for s in (False, True)]
+            assert len(parts[0]) == len(parts[1]) > 0
+            pd.testing.assert_frame_equal(parts[0], parts[1])
+    finally:
+        spark.conf.set(tz_key, prev)
+
+
+def test_chunk_sink_crash_between_files_and_ledger(spark, tmp_path,
+                                                   monkeypatch):
+    """Failpoint: the batch's files have moved into the leaves but the
+    metrics line and ledger never landed. Re-delivering the same
+    batch id leaves one file per leaf with unchanged rows and the
+    ledger lists the entry once."""
+    import json
+
+    import mimir_spark.streaming.rollup_stream as rs
+    from mimir_spark.lineage import TieredStore
+
+    batch = _chunk_batch(spark)
+    ref = TieredStore(tmp_path / "ref")
+    rs.chunk_store_sink(ref, "1h", app_id="app", num_partitions=4)(batch, 3)
+
+    store = TieredStore(tmp_path / "crash")
+    sink = rs.chunk_store_sink(store, "1h", app_id="app", num_partitions=4)
+
+    def failpoint(*args, **kwargs):
+        raise RuntimeError("failpoint: after the file moves")
+
+    with monkeypatch.context() as m:
+        m.setattr(rs, "_append_stream_metrics", failpoint)
+        with pytest.raises(RuntimeError, match="failpoint"):
+            sink(batch, 3)
+    assert _stream_files(store), "the files moved before the failure"
+    led_dir = store.root / "_streaming" / "tier=1h"
+    assert not list(led_dir.glob("bucket_date=*.json"))
+
+    sink(batch, 3)
+    assert _stream_files(store) == _stream_files(ref)
+    for leaf in store.tier_dir("1h").glob("p=*/bucket_date=*"):
+        assert len(list(leaf.iterdir())) == 1
+    leds = sorted(led_dir.glob("bucket_date=*.json"))
+    assert len(leds) == 2
+    assert all(json.loads(f.read_text()) == ["app/3"] for f in leds)
+    assert (led_dir / "metrics.jsonl").read_text() == \
+        (ref.root / "_streaming" / "tier=1h" / "metrics.jsonl").read_text()
+    assert not list((store.root / "_streaming").glob(".stage-*"))
+
+
 def test_streaming_histogram_matches_batch(spark, t_small_df,
                                            stream_dir):
     """Streamed histogram BIN rows == the batch histogram's exploded
