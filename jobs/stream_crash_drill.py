@@ -1,8 +1,10 @@
 """Streaming crash-resume drill: SIGKILL stream_job mid-ingest, restart
 from the same checkpoint + app-id, prove resume ≡ uninterrupted.
 
-The batch companion is jobs/crash_drill.py (rollup_job lineage resume);
-this drills the streaming third. The recovery contract under test:
+The batch writers' crash points are enumerated in
+tests/test_crash_points.py (each failpoint, re-run ≡ single-shot); this
+is the one check of checkpoint replay across a real process kill. The
+recovery contract under test:
 
   - Structured Streaming's checkpoint replays the killed micro-batch
     with the SAME file offsets, so the batch sequence (and therefore
@@ -12,8 +14,9 @@ this drills the streaming third. The recovery contract under test:
     and a per-date applied-batch ledger committed last, so the replayed
     batch's moves overwrite themselves (exactly-once, no read-modify-
     write);
-  - sketch_store_sink's stage/swap protocol rolls a crashed swap
-    forward or back on the next write.
+  - sketch_store_sink commits each date through lineage.swap_dir; the
+    next write heals a cut-short swap, and a date rolled back merges
+    the replayed batch again.
 
   1. ts-ordered source (range-partitioned by ts so file listing order
      == event-time order — the in-order ingest contract)

@@ -56,6 +56,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from . import lineage
 from .read_path import _utc_instant, floor_step_us, parse_step, ts_of_us
 
 SERIES = ("kind", "series_key", "metric")
@@ -345,11 +346,12 @@ def evaluate_rule(spark: SparkSession, store, rule: AlertRule,
 class AlertLedger:
     """Durable per-rule episode tables under ``root``: one parquet
     directory per rule plus a _meta.json sidecar carrying the rule
-    fingerprint and the evaluation high-water mark. Writes stage to a
-    sibling directory and swap atomically (the tier store's
-    discipline): a crash leaves either the old or the new ledger, and
-    re-running converges. Meta lands AFTER the swap, so a crash
-    between them re-evaluates — idempotent, never lossy."""
+    fingerprint and the evaluation high-water mark. Writes stage under
+    ``_staging`` and land with ``lineage.swap_dir``: a crash leaves
+    the old or the new ledger (or, between the swap's renames, none —
+    run_alert_job then rebuilds the full history), and re-running
+    converges. Meta lands AFTER the swap, so a crash between them
+    re-evaluates — idempotent, never lossy."""
 
     def __init__(self, root: str | Path):
         self.root = Path(root)
@@ -375,26 +377,14 @@ class AlertLedger:
         return spark.read.parquet(str(d))
 
     def write(self, df: DataFrame, name: str, meta: dict) -> None:
-        d = self.rule_dir(name)
         stage = self.root / "_staging" / f"rule={name}"
-        tomb = self.root / "_staging" / f"rule={name}.old"
-        for p in (stage, tomb):
-            if p.exists():
-                shutil.rmtree(p)
-        stage.parent.mkdir(parents=True, exist_ok=True)
+        if stage.exists():
+            shutil.rmtree(stage)
         df.select(*EPISODE_COLS).coalesce(1).write.mode(
             "overwrite").parquet(str(stage))
-        # two renames, not rmtree-then-rename: the only crash window
-        # with the directory absent is between the renames, and
-        # run_alert_job treats a missing directory as "no ledger" and
-        # rebuilds in full regardless of the meta sidecar — a crash
-        # here loses a write, never history
-        if d.exists():
-            d.rename(tomb)
-        d.parent.mkdir(parents=True, exist_ok=True)
-        stage.rename(d)
-        shutil.rmtree(tomb, ignore_errors=True)
-        self._meta_path(name).write_text(json.dumps(meta, sort_keys=True))
+        lineage.swap_dir(stage, self.rule_dir(name))
+        lineage._failpoint("alerts.meta")
+        lineage.write_json_atomic(self._meta_path(name), meta)
 
     def open_alerts(self, spark: SparkSession) -> DataFrame | None:
         """All unresolved episodes across rules, tagged by rule name —

@@ -14,11 +14,12 @@ On a real cluster this layout is an Iceberg table (MERGE INTO +
 snapshot per partition commit + rewrite_data_files); the plain-parquet
 implementation here preserves the same commit protocol: data first,
 then the lineage marker — a partition is "done" iff its lineage row is
-readable, and every write is an atomic directory replace.
+readable, and every write replaces a directory through swap_dir.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import time
@@ -100,6 +101,75 @@ def _cluster_for_aux(df: DataFrame) -> DataFrame:
         .sortWithinPartitions("bucket_date", *cols)
 
 
+def _failpoint(name: str) -> None:
+    """Named crash point of a durable write; does nothing. A test
+    replaces this module attribute to stop a writer at the step the
+    way a hard kill would, so other modules call it as
+    ``lineage._failpoint``."""
+
+
+def _old_of(dst: Path) -> Path:
+    return dst.with_name(f".old-{dst.name}")
+
+
+def heal_swap(dst: Path) -> None:
+    """Finish a swap_dir of ``dst`` that a crash interrupted: an
+    ``.old`` sibling with no live ``dst`` is rolled back, one beside a
+    live ``dst`` is deleted. swap_dir heals first; a writer that reads
+    ``dst`` before swapping it calls this before the read."""
+    old = _old_of(dst)
+    if not old.exists():
+        return
+    if dst.exists():
+        shutil.rmtree(old)
+    else:
+        old.rename(dst)
+
+
+def swap_dir(staged: Path, dst: Path) -> None:
+    """Replace directory ``dst`` with ``staged`` — the one commit step
+    of every directory the store's writers replace.
+
+    Protocol: rename the live ``dst`` to its sibling ``.old-<name>``,
+    rename ``staged`` to ``dst``, remove the old dir. Readers and the
+    ``p=*`` / ``bucket_date=*`` / ``rule=*`` globs skip dot-prefixed
+    names, so a reader sees the old ``dst``, the new one, or (between
+    the renames) none. A crash leaves the staged dir, which the
+    writer's retry rebuilds, and at most one ``.old``, which
+    heal_swap settles before the next swap of the same ``dst``: with
+    no live ``dst`` it is rolled back, beside the new one it is
+    deleted. Rolling back is always correct, because the retry redoes
+    a rolled-back write: a writer's marker (lineage row, ledger, meta)
+    lands after the swap or travels inside ``dst``, and the writers
+    with no marker (compaction, upgrade) redo every swap. A missing
+    ``staged`` removes ``dst`` through the same steps.
+
+    Repair runs only in writers, never in readers: a reader could
+    race a live swap."""
+    heal_swap(dst)
+    _failpoint("swap_dir.staged")
+    old = _old_of(dst)
+    if dst.exists():
+        dst.rename(old)
+    _failpoint("swap_dir.moved_aside")
+    if staged.exists():
+        dst.parent.mkdir(parents=True, exist_ok=True)
+        staged.rename(dst)
+    _failpoint("swap_dir.moved_in")
+    if old.exists():
+        shutil.rmtree(old)
+
+
+def write_json_atomic(path: Path, obj) -> None:
+    """Replace the JSON sidecar ``path`` in one step: a kill mid-write
+    leaves the previous file whole, where a truncated one would fail
+    every later ``json.loads``. The temp file is dot-prefixed, so the
+    sidecar globs skip it."""
+    tmp = path.with_name(f".tmp-{path.name}")
+    tmp.write_text(json.dumps(obj, sort_keys=True))
+    os.replace(tmp, path)
+
+
 class TieredStore:
     """Date-partitioned parquet layout per tier with O(metadata) expiry."""
 
@@ -111,7 +181,7 @@ class TieredStore:
 
     def write_partition(self, df: DataFrame, tier: str, partition_id: int) -> None:
         out = self.tier_dir(tier) / f"p={partition_id}"
-        tmp = out.with_name(out.name + ".tmp")
+        tmp = out.with_name(f".tmp-{out.name}")
         if tmp.exists():
             shutil.rmtree(tmp)
         (
@@ -122,9 +192,7 @@ class TieredStore:
             .partitionBy("bucket_date")
             .parquet(str(tmp))
         )
-        if out.exists():
-            shutil.rmtree(out)
-        tmp.rename(out)
+        swap_dir(tmp, out)
 
     def sketch_dir(self, tier: str) -> Path:
         return self.root / f"sketch={tier}"
@@ -135,11 +203,11 @@ class TieredStore:
     def _write_aux_tier(self, df: DataFrame, out: Path) -> None:
         """Shared auxiliary-tier (sketch / histogram) writer:
         date-partitioned like the aggregate tiers (same O(metadata)
-        expiry via the shared layout), atomically swapped into place,
+        expiry via the shared layout), swapped into place by swap_dir,
         aux_shards() series-sorted files per date leaf written by as
         many parallel tasks (_cluster_for_aux — the r6 fix for the
         single-reducer-per-date write bottleneck)."""
-        tmp = out.with_name(out.name + ".tmp")
+        tmp = out.with_name(f".tmp-{out.name}")
         if tmp.exists():
             shutil.rmtree(tmp)
         (
@@ -149,9 +217,7 @@ class TieredStore:
             .partitionBy("bucket_date")
             .parquet(str(tmp))
         )
-        if out.exists():
-            shutil.rmtree(out)
-        tmp.rename(out)
+        swap_dir(tmp, out)
 
     def write_sketch_tier(self, sketch_df: DataFrame, tier: str) -> None:
         """Persist a distinct-count sketch tier (rollup_distinct_sketch
@@ -241,40 +307,19 @@ class TieredStore:
             .parquet(str(staging))
         )
         out_root = dir_of(to_tier)
-        existed = out_root.exists()
-        out_root.mkdir(parents=True, exist_ok=True)
-        # repair a previously crashed swap BEFORE touching ledgers: an
-        # orphan .old dir with no live dir is rolled back (its data —
-        # and crucially its streaming ledger, which lives nowhere
-        # else — must survive); with a live dir it is leftover debris
-        for old in out_root.glob(".old-*"):
-            dst = out_root / f"bucket_date={old.name[len('.old-'):]}"
-            if dst.exists():
-                shutil.rmtree(old)
-            else:
-                old.rename(dst)
         replaced = []
         for src in sorted(staging.glob("bucket_date=*")):
-            d = src.name.split("=", 1)[1]
             dst = out_root / src.name
+            heal_swap(dst)  # the ledger below may sit in its .old
             old_ledger = dst / "_applied_batches.json"
             if old_ledger.exists():
                 shutil.copy2(old_ledger, src / old_ledger.name)
-            # rename/rename/rm, never rmtree-then-rename: a crash
-            # between the renames leaves the date (and its ledger) in
-            # .old, restored by the repair pass above on the next run
-            old = out_root / f".old-{d}"
-            if dst.exists():
-                dst.rename(old)
-            src.rename(dst)
-            shutil.rmtree(old, ignore_errors=True)
-            replaced.append(d)
+            swap_dir(src, dst)
+            replaced.append(src.name.split("=", 1)[1])
         shutil.rmtree(staging, ignore_errors=True)
         if not replaced:
-            # e.g. `since` past every fine date: nothing written; do
-            # not leave behind (or try to read) an empty tier dir
-            if not existed:
-                shutil.rmtree(out_root, ignore_errors=True)
+            # e.g. `since` past every fine date: nothing written, and
+            # the tier dir (maybe absent) must not be read
             return 0
         return (
             read_of(spark, to_tier)
@@ -327,18 +372,21 @@ class TieredStore:
                 dropped.append(str(led))
         return dropped
 
-    def _stage_promote(self, df: DataFrame, tier: str, name: str) -> int:
+    def _stage_promote(self, df: DataFrame, tier: str, name: str,
+                       whole_tier: bool = False) -> int:
         """Write ``df`` (must carry int column ``p`` and date column
         ``bucket_date``) as ONE staged Spark job partitioned by
-        (p, bucket_date), then atomically swap each staged
+        (p, bucket_date), then swap_dir each staged
         ``p=*/bucket_date=*`` LEAF into the tier. Leaf granularity
         matters under tiered retention: the fine tier expires early
         (that's its policy), so a re-compaction's output covers only
         the fine tier's surviving dates — swapping whole ``p=`` dirs
         would destroy the coarse tier's older history, the very data
-        the coarser retention exists to keep. Idempotent: a crash
-        mid-promote leaves each leaf either old or new, and re-running
-        converges. Returns the number of ``p=`` partitions touched."""
+        the coarser retention exists to keep. ``whole_tier`` swaps the
+        staged tree in for the whole tier instead (a rebuild: leaves
+        the output lacks are dropped). Idempotent: re-running after a
+        crash converges. Returns the number of ``p=`` partitions
+        touched."""
         staging = self.root / "_staging" / f"maint-{name}"
         if staging.exists():
             shutil.rmtree(staging)
@@ -348,16 +396,15 @@ class TieredStore:
             .partitionBy("p", "bucket_date")
             .parquet(str(staging))
         )
-        touched = set()
-        for src in sorted(staging.glob("p=*/bucket_date=*")):
-            dst = self.tier_dir(tier) / src.parent.name / src.name
-            if dst.exists():
-                shutil.rmtree(dst)
-            dst.parent.mkdir(parents=True, exist_ok=True)
-            src.rename(dst)
-            touched.add(src.parent.name)
-        shutil.rmtree(staging, ignore_errors=True)
-        return len(touched)
+        leaves = sorted(staging.glob("p=*/bucket_date=*"))
+        if whole_tier:
+            swap_dir(staging, self.tier_dir(tier))
+        else:
+            for src in leaves:
+                swap_dir(src, self.tier_dir(tier) / src.parent.name
+                         / src.name)
+            shutil.rmtree(staging, ignore_errors=True)
+        return len({src.parent.name for src in leaves})
 
     def compact_tier(self, spark: SparkSession, from_tier: str,
                      to_tier: str, max_points: int | None = None,
@@ -416,10 +463,9 @@ class TieredStore:
         the format-upgrade path (util/IndexUpgrader.java analogue:
         old-format index rewritten in place). ONE Spark job per tier
         (read ``p=*`` with the partition column, rewrite chunks,
-        promote with atomic per-partition replaces) and idempotent:
-        already-current chunks pass through byte-stable, a crash
-        mid-upgrade leaves whole partitions either old or new, and
-        re-running converges. Returns the partition count."""
+        promote with per-leaf swap_dir) and idempotent: already-current
+        chunks pass through byte-stable, and re-running after a crash
+        converges. Returns the partition count."""
         from . import codec as _codec
 
         @F.pandas_udf("binary")
@@ -428,6 +474,10 @@ class TieredStore:
                 lambda b: _codec.upgrade_chunk(bytes(b), max_points))
 
         src_dir = self.tier_dir(tier)
+        # the tier is its own source: a leaf a crashed upgrade left in
+        # its .old must be back before the read, or the re-run drops it
+        for old in src_dir.glob("p=*/.old-*"):
+            heal_swap(old.with_name(old.name.removeprefix(".old-")))
         if not any(src_dir.glob("p=*")):
             return 0
         df = (
@@ -477,6 +527,7 @@ class TieredStore:
         pdf["committed_at"] = pdf["committed_at"].astype("datetime64[us]")
         pdf.to_parquet(d / "lineage.parquet", index=False,
                        coerce_timestamps="us", allow_truncated_timestamps=True)
+        _failpoint("lineage.marker")
         (d / "_COMMITTED").touch()
 
     def read_lineage(self, spark: SparkSession, job_id: str) -> DataFrame:
@@ -536,19 +587,15 @@ class TieredStore:
         for row in lineage_rows_from_stats(pending, by_p, job_id):
             p = row["partition_id"]
             for tier in tiers:
-                src_dir = staging / f"tier={tier}" / f"p={p}"
-                dst = self.tier_dir(tier) / f"p={p}"
                 # a pending shard is EXACTLY this job's output — the
                 # job re-derives from the source, so data from a
                 # crashed attempt or an earlier job must not outlive
                 # the commit even when this run produced no rows for
-                # the shard (the Iceberg backend's conditional
-                # overwrite has the same semantics)
-                if dst.exists():
-                    shutil.rmtree(dst)
-                if src_dir.exists():
-                    dst.parent.mkdir(parents=True, exist_ok=True)
-                    src_dir.rename(dst)
+                # the shard (swap_dir of a missing staged dir removes
+                # dst; the Iceberg backend's conditional overwrite
+                # has the same semantics)
+                swap_dir(staging / f"tier={tier}" / f"p={p}",
+                         self.tier_dir(tier) / f"p={p}")
             self.commit_lineage(row)
             results.append(row)
         shutil.rmtree(staging, ignore_errors=True)

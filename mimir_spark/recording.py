@@ -33,7 +33,6 @@ from __future__ import annotations
 
 import hashlib
 import json
-import shutil
 from dataclasses import dataclass, fields
 from pathlib import Path
 
@@ -41,6 +40,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import lineage
 from .lineage import TieredStore
 from .read_path import floor_step_us, parse_step, ts_of_us
 from .rollup import TIER_US
@@ -199,8 +199,9 @@ def refresh_recording(spark: SparkSession, store, rule: RecordingRule,
     semantics): leaves for dates >= t0 swap, older recorded dates are
     preserved. Only a changed rule definition (fingerprint) or a
     changed ``num_partitions`` (which re-keys the leaf layout — stale
-    old-p leaves would double-count otherwise) clears the tier
-    directory for a true rebuild."""
+    old-p leaves would double-count otherwise) rebuilds: the whole
+    tier is staged and swapped in at once, so a crash mid-rebuild
+    still serves the old recording."""
     from .rollup import rollup_points
 
     rec = recording_store(store, rule.name)
@@ -213,9 +214,6 @@ def refresh_recording(spark: SparkSession, store, rule: RecordingRule,
     if not same:
         mode = "full"
         t0 = None  # the whole window re-derives
-        tier_dir = rec.tier_dir(rule.step)
-        if tier_dir.exists():
-            shutil.rmtree(tier_dir)
     elif (rule.date_incremental() and t0 is None
             and prev_until is not None and prev_until <= t1_us):
         if prev_until == t1_us:
@@ -239,16 +237,18 @@ def refresh_recording(spark: SparkSession, store, rule: RecordingRule,
             .withColumn("p", F.pmod(F.xxhash64("kind", "series_key"),
                                     F.lit(num_partitions)).cast("int"))
             .withColumn("bucket_date", F.to_date("bucket_ts")))
-    touched = rec._stage_promote(rows, rule.step, f"rec-{rule.name}")
+    touched = rec._stage_promote(rows, rule.step, f"rec-{rule.name}",
+                                 whole_tier=not same)
     _meta_path(rec).parent.mkdir(parents=True, exist_ok=True)
     # a window recompute of an OLD range must not regress the
     # high-water mark (it would re-trigger forward recomputes)
     until = t1_us if mode != "window" else max(t1_us, prev_until or 0)
-    _meta_path(rec).write_text(json.dumps(
+    lineage._failpoint("recording.meta")
+    lineage.write_json_atomic(
+        _meta_path(rec),
         {"fingerprint": rule.fingerprint(), "rule_name": rule.name,
          "step": rule.step, "refreshed_until_us": until,
-         "num_partitions": num_partitions},
-        sort_keys=True))
+         "num_partitions": num_partitions})
     return {"mode": mode, "touched": touched}
 
 

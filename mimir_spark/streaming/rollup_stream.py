@@ -383,10 +383,10 @@ def _mergeable_store_sink(store, app_id: str, *, root, metrics_dir,
     Exactly-once under foreachBatch's at-least-once retries: each date
     dir carries its own applied-batch ledger listing
     ``"{app_id}/{batch_id}"`` entries, written into the staged dir
-    BEFORE the directory swap. A retry skips dates whose ledger
-    already lists the batch and re-merges only the dates the crash
-    left unswapped — per-date exactly-once with no external
-    transaction log.
+    that ``lineage.swap_dir`` swaps in, so data and ledger land
+    together. A retry skips dates whose ledger already lists the
+    batch and re-merges only the dates the crash left unswapped —
+    per-date exactly-once with no external transaction log.
 
     ``app_id`` is the Delta ``txnAppId`` pattern: batch ids restart at
     0 whenever a query starts from a FRESH checkpoint, so ledger
@@ -398,16 +398,6 @@ def _mergeable_store_sink(store, app_id: str, *, root, metrics_dir,
     silently drop the replayed batches, reusing the old tier would
     double-merge them.
 
-    Swap protocol (crash-safe at every window): build
-    ``.stage-{d}-…`` (ledger written LAST = completion marker), rename
-    the live dir to ``.old-{d}-…``, rename staged in, drop old. On
-    entry each date first repairs whatever a crash left: a complete
-    staged dir with no live dir is rolled FORWARD (rename in); an
-    ``.old`` dir with no live dir is rolled BACK (the staged merge
-    never landed); incomplete staged dirs are discarded. No window
-    loses the date dir: the data is always in at least one of
-    live/staged-complete/old.
-
     ``prepare`` (optional) maps the batch's emitted rows to the
     tier's row shape BEFORE the per-date merge (the histogram sink
     assembles bin rows into map rows there); ``merge`` re-aggregates
@@ -417,9 +407,7 @@ def _mergeable_store_sink(store, app_id: str, *, root, metrics_dir,
     import json
     import shutil
 
-    from ..lineage import aux_shards
-
-    entry = None  # set per batch: f"{app_id}/{batch_id}"
+    from .. import lineage
 
     def _load_ledger(led) -> list:
         """Read a ledger, normalizing bare-int entries written by the
@@ -431,41 +419,7 @@ def _mergeable_store_sink(store, app_id: str, *, root, metrics_dir,
         return [f"{app_id}/{e}" if isinstance(e, int) else e
                 for e in json.loads(led.read_text())]
 
-    def _complete(staged) -> bool:
-        """A staged dir is complete iff its ledger (written last)
-        lists the current batch entry."""
-        led = staged / _SKETCH_LEDGER
-        try:
-            return led.exists() and entry in _load_ledger(led)
-        except (ValueError, OSError):
-            return False
-
-    def _repair(root, d: str) -> bool:
-        """Roll a crashed swap for date ``d`` forward or back.
-        Returns True if the current batch entry is already live
-        (so the merge must be skipped)."""
-        ddir = root / f"bucket_date={d}"
-        staged = root / f".stage-{d}-{app_id}-{batch_key}"
-        old = root / f".old-{d}-{app_id}-{batch_key}"
-        if not ddir.exists():
-            if _complete(staged):
-                # crashed between live->old and staged->live
-                staged.rename(ddir)
-            elif old.exists():
-                # crashed after live->old with no landable staged
-                old.rename(ddir)
-        if ddir.exists():
-            led = ddir / _SKETCH_LEDGER
-            if led.exists() and entry in _load_ledger(led):
-                # batch already applied; drop swap debris
-                shutil.rmtree(old, ignore_errors=True)
-                shutil.rmtree(staged, ignore_errors=True)
-                return True
-        return False
-
     def write(batch_df: DataFrame, batch_id: int) -> None:
-        nonlocal entry, batch_key
-        batch_key = str(batch_id)
         entry = f"{app_id}/{batch_id}"
         shaped = batch_df.withColumn("bucket_ts", F.expr(_NTZ_TO_INSTANT))
         if prepare is not None:
@@ -486,21 +440,23 @@ def _mergeable_store_sink(store, app_id: str, *, root, metrics_dir,
             if not dates:
                 return
             spark = batch_df.sparkSession
-            root.mkdir(parents=True, exist_ok=True)
             for d in dates:
-                if _repair(root, d):
-                    continue
                 ddir = root / f"bucket_date={d}"
+                # the merge reads the live dir: a crashed swap's .old
+                # must be back first
+                lineage.heal_swap(ddir)
                 ledger = ddir / _SKETCH_LEDGER
                 applied = (_load_ledger(ledger)
                            if ledger.exists() else [])
+                if entry in applied:
+                    continue
                 part = new.filter(F.col("bucket_date") == d) \
                     .drop("bucket_date")
                 if any(ddir.glob("*.parquet")):
                     part = spark.read.parquet(str(ddir)) \
                         .select(*cols).unionByName(part)
                 merged = merge(part)
-                staged = root / f".stage-{d}-{app_id}-{batch_key}"
+                staged = root / f".stage-{ddir.name}"
                 if staged.exists():
                     shutil.rmtree(staged)
                 # aux_shards() parallel writers per date dir, not one:
@@ -511,7 +467,7 @@ def _mergeable_store_sink(store, app_id: str, *, root, metrics_dir,
                 # values hashed into 8 partitions would collide, guide
                 # §2.5) spreads evenly; each file stays series-sorted
                 # so row-group stats prune exactly as before.
-                merged.repartition(aux_shards(),
+                merged.repartition(lineage.aux_shards(),
                                    F.xxhash64("kind", "series_key")) \
                     .sortWithinPartitions(
                         "kind", "series_key", "metric", "bucket_ts") \
@@ -520,26 +476,10 @@ def _mergeable_store_sink(store, app_id: str, *, root, metrics_dir,
                     json.dumps(applied + [entry]))
                 _append_stream_metrics(metrics_dir, app_id, batch_id, d,
                                        stats[d])
-                old = root / f".old-{d}-{app_id}-{batch_key}"
-                if ddir.exists():
-                    ddir.rename(old)
-                staged.rename(ddir)
-                shutil.rmtree(old, ignore_errors=True)
-                # sweep debris earlier batches left behind (a crash
-                # after their swap landed but before their .old was
-                # removed): once THIS date's swap is live, any
-                # older-batch .old/.stage for it is safely dead —
-                # foreachBatch serializes batches, so an earlier
-                # batch's merge either landed (entry live) or was
-                # re-merged by its own retry before this one ran
-                for stale in root.glob(f".old-{d}-*"):
-                    shutil.rmtree(stale, ignore_errors=True)
-                for stale in root.glob(f".stage-{d}-*"):
-                    shutil.rmtree(stale, ignore_errors=True)
+                lineage.swap_dir(staged, ddir)
         finally:
             new.unpersist()
 
-    batch_key = ""
     return write
 
 
@@ -582,7 +522,7 @@ def chunk_store_sink(store, tier: str, app_id: str = "stream",
     (``stream-{app_id}-{batch_id}.parquet``), making a replayed move
     overwrite itself. Per date the commit order is files, then the
     metrics sidecar line, then the ledger (in a ``_streaming``
-    sidecar, invisible to readers). Crash anywhere → retry redoes
+    sidecar, invisible to readers, replaced atomically). Crash anywhere → retry redoes
     idempotent file moves and re-commits the ledger.
 
     Ownership contract: the batch job's whole-shard replace is the
@@ -597,6 +537,8 @@ def chunk_store_sink(store, tier: str, app_id: str = "stream",
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
+
+    from .. import lineage
 
     series_id = F.concat_ws("\x1f", F.col("kind"), F.col("series_key"))
     cols = ["kind", "series_key", "metric", "bucket_ts", "cnt",
@@ -661,7 +603,8 @@ def chunk_store_sink(store, tier: str, app_id: str = "stream",
                 "points": pc.sum(part["cnt"]).as_py(),
                 "chunk_bytes":
                     pc.sum(pc.binary_length(part["chunk"])).as_py()})
-            led.write_text(json.dumps(applied + [entry]))
+            lineage._failpoint("chunk_sink.ledger")
+            lineage.write_json_atomic(led, applied + [entry])
 
     return write
 

@@ -410,15 +410,15 @@ def test_compact_sketch_tier_preserves_expired_dates_and_ledgers(
 
 
 def test_compact_sketch_tier_crash_repair_and_empty_since(
-        spark, t_small_df, tmp_path):
-    """The per-date swap is rename/rename/rm: a crash between the two
+        spark, t_small_df, tmp_path, monkeypatch):
+    """The per-date swap is lineage.swap_dir: a crash between its two
     renames leaves the date (data AND its irreplaceable streaming
     ledger) in .old, restored on the next run. And a since past every
     fine date is a clean no-op — no empty tier dir left behind, no
     read of one attempted."""
     import json
-    import shutil
 
+    from mimir_spark import lineage
     from mimir_spark.rollup import rollup_distinct_sketch
 
     s = TieredStore(tmp_path / "sk_crash")
@@ -432,10 +432,18 @@ def test_compact_sketch_tier_crash_repair_and_empty_since(
     ddir = s.sketch_dir("1h") / f"bucket_date={d}"
     (ddir / "_applied_batches.json").write_text(json.dumps(["stream/9"]))
 
-    # simulate the crash window: live renamed to .old, staged never
-    # landed (a fresh run starts by wiping _staging)
-    ddir.rename(s.sketch_dir("1h") / f".old-{d}")
-    shutil.rmtree(s.root / "_staging", ignore_errors=True)
+    # crash window: the first date's live dir renamed to .old, its
+    # staged replacement not yet renamed in
+    def failpoint(name):
+        if name == "swap_dir.moved_aside":
+            raise RuntimeError(f"failpoint {name}")
+
+    with monkeypatch.context() as m:
+        m.setattr(lineage, "_failpoint", failpoint)
+        with pytest.raises(RuntimeError, match="failpoint"):
+            s.compact_sketch_tier(spark, "1m", "1h")
+    assert not ddir.exists()
+    assert (s.sketch_dir("1h") / f".old-bucket_date={d}").exists()
 
     s.compact_sketch_tier(spark, "1m", "1h")
     assert ddir.exists()

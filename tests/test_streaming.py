@@ -507,14 +507,15 @@ def test_sketch_store_sink_end_to_end(spark, t_small_df, stream_dir,
                                 kind="conv", tier="1h").count() > 0
 
 
-def test_sketch_sink_crash_windows_and_app_id(spark, t_small_df, tmp_path):
+def test_sketch_sink_crash_windows_and_app_id(spark, t_small_df, tmp_path,
+                                              monkeypatch):
     """The sink's swap protocol never loses a date dir, whichever
     window a crash lands in, and ledger entries are scoped per app_id
     (Delta txnAppId pattern — fresh-checkpoint restarts under a new
     app_id re-merge instead of silently dropping)."""
     import json
-    import shutil
 
+    from mimir_spark import lineage
     from mimir_spark.lineage import TieredStore
     from mimir_spark.rollup import rollup_distinct_sketch
     from mimir_spark.streaming.rollup_stream import (
@@ -538,34 +539,42 @@ def test_sketch_sink_crash_windows_and_app_id(spark, t_small_df, tmp_path):
 
     d = dates[0].name.split("=", 1)[1]
     ddir = root / f"bucket_date={d}"
+    old = root / f".old-bucket_date={d}"
+    staged = root / f".stage-bucket_date={d}"
 
-    # window A: crash between live->old and staged->live during batch 1
-    # (complete staged + old present, live missing) -> retry rolls the
-    # staged merge FORWARD and the ledger gains appA/1
-    staged = root / f".stage-{d}-appA-1"
-    shutil.copytree(ddir, staged)
-    led = json.loads((staged / _SKETCH_LEDGER).read_text())
-    (staged / _SKETCH_LEDGER).write_text(json.dumps(led + ["appA/1"]))
-    ddir.rename(root / f".old-{d}-appA-1")
-    sink(batch, 1)  # retry: repairs date d, merges the other dates
+    def crash_at(step, write, batch_id):
+        """Run ``write`` with a crash at the first hit of failpoint
+        ``step`` — date d, the batch's first date."""
+        def failpoint(name):
+            if name == step:
+                raise RuntimeError(f"failpoint {name}")
+        with monkeypatch.context() as m:
+            m.setattr(lineage, "_failpoint", failpoint)
+            with pytest.raises(RuntimeError, match="failpoint"):
+                write(batch, batch_id)
+
+    # window A: crash after the merged dir swapped in, before the old
+    # one was removed during batch 1 -> retry keeps the merge (the
+    # ledger holds appA/1), deletes the old dir, merges the other dates
+    crash_at("swap_dir.moved_in", sink, 1)
+    assert old.exists()
+    sink(batch, 1)
     assert ddir.exists()
     assert "appA/1" in json.loads((ddir / _SKETCH_LEDGER).read_text())
-    assert not (root / f".old-{d}-appA-1").exists()
+    assert not old.exists()
     assert not staged.exists()
 
-    # window B: crash after live->old with an INCOMPLETE staged dir
-    # (no ledger) during batch 2 -> retry rolls BACK to the old data,
-    # then re-merges normally
-    staged2 = root / f".stage-{d}-appA-2"
-    staged2.mkdir()
-    ddir.rename(root / f".old-{d}-appA-2")
-    before = json.loads((root / f".old-{d}-appA-2" / _SKETCH_LEDGER)
-                        .read_text())
+    # window B: crash between live->old and staged->live during batch
+    # 2 (live missing) -> retry rolls BACK to the old data, whose
+    # ledger lacks appA/2, then re-merges normally
+    before = json.loads((ddir / _SKETCH_LEDGER).read_text())
+    crash_at("swap_dir.moved_aside", sink, 2)
+    assert not ddir.exists() and old.exists()
     sink(batch, 2)
     assert ddir.exists()
     after = json.loads((ddir / _SKETCH_LEDGER).read_text())
     assert after == before + ["appA/2"]
-    assert not (root / f".old-{d}-appA-2").exists()
+    assert not old.exists()
 
     # app_id scoping: batch id 0 under a DIFFERENT app_id is a new
     # transaction (merges), while under the same app_id it's a no-op
@@ -580,12 +589,10 @@ def test_sketch_sink_crash_windows_and_app_id(spark, t_small_df, tmp_path):
     assert store.read_sketch_tier(spark, "1h") \
         .agg(F.sum("cnt")).first()[0] == cnt_before + batch_total
 
-    # debris from an earlier batch whose post-swap cleanup crashed is
-    # swept when a later batch next touches the date
-    stale = root / f".old-{d}-appA-0"
-    stale.mkdir()
+    # a staged dir a crash left before the swap is rebuilt by the retry
+    crash_at("swap_dir.staged", sink_b, 1)
+    assert staged.exists()
     sink_b(batch, 1)
-    assert not stale.exists()
     assert not list(root.glob(".old-*")) and not list(root.glob(".stage-*"))
 
     # pre-app_id ledgers (bare ints) are read as THIS incarnation's
@@ -943,6 +950,49 @@ def test_chunk_sink_crash_between_files_and_ledger(spark, tmp_path,
     assert (led_dir / "metrics.jsonl").read_text() == \
         (ref.root / "_streaming" / "tier=1h" / "metrics.jsonl").read_text()
     assert not list((store.root / "_streaming").glob(".stage-*"))
+
+
+def test_chunk_sink_interrupted_ledger_write_keeps_previous(
+        spark, tmp_path, monkeypatch):
+    """A kill in the middle of writing a date's ledger leaves the
+    previous ledger whole (a truncated one would fail every later
+    batch in json.loads): the retry reads it and lands the batch
+    once."""
+    import json
+    import pathlib
+
+    import mimir_spark.streaming.rollup_stream as rs
+    from mimir_spark.lineage import TieredStore
+
+    batch = _chunk_batch(spark)
+    ref = TieredStore(tmp_path / "ref")
+    ref_sink = rs.chunk_store_sink(ref, "1h", app_id="app",
+                                   num_partitions=4)
+    ref_sink(batch, 0)
+    ref_sink(batch, 1)
+
+    store = TieredStore(tmp_path / "cut")
+    sink = rs.chunk_store_sink(store, "1h", app_id="app", num_partitions=4)
+    sink(batch, 0)
+    real = pathlib.Path.write_text
+
+    def torn(self, data, *args, **kwargs):
+        real(self, data[:len(data) // 2], *args, **kwargs)
+        raise RuntimeError("killed mid-write")
+
+    with monkeypatch.context() as m:
+        m.setattr(pathlib.Path, "write_text", torn)
+        with pytest.raises(RuntimeError, match="mid-write"):
+            sink(batch, 1)
+    leds = sorted((store.root / "_streaming" / "tier=1h")
+                  .glob("bucket_date=*.json"))
+    assert len(leds) == 2
+    assert all(json.loads(f.read_text()) == ["app/0"] for f in leds)
+
+    sink(batch, 1)
+    assert all(json.loads(f.read_text()) == ["app/0", "app/1"]
+               for f in leds)
+    assert _stream_files(store) == _stream_files(ref)
 
 
 def test_streaming_histogram_matches_batch(spark, t_small_df,
