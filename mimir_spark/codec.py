@@ -460,6 +460,31 @@ def _encode_many_general(ts: np.ndarray, vals: np.ndarray,
     return [raw[o_l[g]:o_l[g + 1]] for g in range(ngroups)]
 
 
+def encode_groups(ts_us, v, starts, max_points=None):
+    """``encode_many`` with a size bound: groups above ``max_points``
+    become concatenated self-delimiting sub-chunks (decode_all reads
+    them back) so one hot (series, bucket) group never materializes an
+    unbounded array in the codec."""
+    if not max_points:
+        return encode_many(ts_us, v, starts)
+    n = len(ts_us)
+    ends = np.append(starts[1:], n)
+    sizes = ends - starts
+    nsub = np.maximum(1, -(-sizes // max_points))
+    total = int(nsub.sum())
+    if total == len(starts):
+        return encode_many(ts_us, v, starts)
+    group_idx = np.repeat(np.arange(len(starts)), nsub)
+    k = np.arange(total) - np.repeat(np.cumsum(nsub) - nsub, nsub)
+    sub_starts = starts[group_idx] + k * max_points
+    chunks = encode_many(ts_us, v, sub_starts)
+    out, pos = [], 0
+    for cnt in nsub.tolist():
+        out.append(b"".join(chunks[pos:pos + cnt]))
+        pos += cnt
+    return out
+
+
 def encode_chunk(ts: np.ndarray, vals: np.ndarray) -> bytes:
     """Encode a single (ts, values) series into one chunk."""
     return encode_many(ts, vals, np.array([0], dtype=np.int64))[0]
@@ -574,6 +599,37 @@ def decode_all(buf: bytes) -> tuple[np.ndarray, np.ndarray]:
     return np.concatenate(ts_parts), np.concatenate(val_parts)
 
 
+def decode_many(buffers) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Decode many chunk buffers (each a chunk or a sub-chunk
+    container) -> flat (ts, values) arrays in buffer order plus each
+    buffer's point count: buffer i's ``decode_all`` is the slice of
+    ``counts[i]`` points after ``counts[:i].sum()``.
+
+    Single-point chunks — the encoder's fixed 30-byte layout, most of
+    a fine tier — are decoded together in one numpy gather; every
+    other buffer (multi-point, legacy v0, sub-chunk container) goes
+    through ``decode_all``."""
+    bufs = [bytes(b) for b in buffers]
+    lens = np.fromiter(map(len, bufs), dtype=np.int64, count=len(bufs))
+    cand = np.flatnonzero(lens == _SINGLE_LEN)
+    rec = np.frombuffer(b"".join([bufs[i] for i in cand]),
+                        dtype=np.uint8).reshape(len(cand), _SINGLE_LEN)
+    ok = (rec[:, :HEADER_LEN] == _SINGLE_HEADER).all(axis=1)
+    single, rec = cand[ok], rec[ok]
+    rest = np.setdiff1d(np.arange(len(bufs)), single)
+    parts = [decode_all(bufs[i]) for i in rest.tolist()]
+    counts = np.ones(len(bufs), dtype=np.int64)
+    counts[rest] = [len(t) for t, _ in parts]
+    offs = np.cumsum(counts) - counts
+    ts = np.empty(int(counts.sum()), dtype=np.int64)
+    bits = np.empty(len(ts), dtype=np.uint64)  # NaN payloads kept as bits
+    ts[offs[single]] = rec[:, HEADER_LEN:HEADER_LEN + 8].copy().view(">i8").ravel()
+    bits[offs[single]] = rec[:, HEADER_LEN + 8:].copy().view(">u8").ravel()
+    for o, (t, v) in zip(offs[rest].tolist(), parts):
+        ts[o:o + len(t)], bits[o:o + len(t)] = t, v.view(np.uint64)
+    return ts, bits.view(np.float64), counts
+
+
 # ---------------------------------------------------------------------------
 # format upgrade (util/IndexUpgrader.java analogue: rewrite old-format
 # chunks in place to the current version)
@@ -610,33 +666,4 @@ def upgrade_chunk(buf: bytes, max_points: int | None = None) -> bytes:
     if current:
         return bytes(buf)
     ts, vals = decode_all(bytes(buf))
-    if max_points and len(ts) > max_points:
-        starts = np.arange(0, len(ts), max_points, dtype=np.int64)
-        return b"".join(encode_many(ts, vals, starts))
-    return encode_chunk(ts, vals)
-
-
-def merge_chunks(chunks: list[bytes], max_points: int | None = None) -> bytes:
-    """Merge chunks into one: decode, concatenate in order, re-encode.
-
-    Callers must pass chunks in ascending bucket order so the merged
-    point stream stays time-ordered (the tier-cascade invariant:
-    decode(merge(a, b)) == concat(decode(a), decode(b))).
-
-    ``max_points`` preserves the sub-chunk container on the compaction
-    path: a merged group larger than the bound is re-encoded as
-    back-to-back self-delimiting sub-chunks (decode_all reads them
-    back), so the memory bound of the one-pass writer also holds for
-    cascade/compaction output.
-    """
-    ts_parts, val_parts = [], []
-    for c in chunks:
-        t, v = decode_all(bytes(c))
-        ts_parts.append(t)
-        val_parts.append(v)
-    ts = np.concatenate(ts_parts)
-    vals = np.concatenate(val_parts)
-    if max_points and len(ts) > max_points:
-        starts = np.arange(0, len(ts), max_points, dtype=np.int64)
-        return b"".join(encode_many(ts, vals, starts))
-    return encode_chunk(ts, vals)
+    return encode_groups(ts, vals, np.zeros(1, dtype=np.int64), max_points)[0]

@@ -373,7 +373,8 @@ class TieredStore:
         return dropped
 
     def _stage_promote(self, df: DataFrame, tier: str, name: str,
-                       whole_tier: bool = False) -> int:
+                       whole_tier: bool = False,
+                       clustered: bool = False) -> int:
         """Write ``df`` (must carry int column ``p`` and date column
         ``bucket_date``) as ONE staged Spark job partitioned by
         (p, bucket_date), then swap_dir each staged
@@ -384,15 +385,18 @@ class TieredStore:
         would destroy the coarse tier's older history, the very data
         the coarser retention exists to keep. ``whole_tier`` swaps the
         staged tree in for the whole tier instead (a rebuild: leaves
-        the output lacks are dropped). Idempotent: re-running after a
-        crash converges. Returns the number of ``p=`` partitions
-        touched."""
+        the output lacks are dropped). ``clustered``: ``df`` already
+        holds each leaf whole in one partition, series-sorted (the
+        cascade's output), so it is written without another shuffle.
+        Idempotent: re-running after a crash converges. Returns the
+        number of ``p=`` partitions touched."""
         staging = self.root / "_staging" / f"maint-{name}"
         if staging.exists():
             shutil.rmtree(staging)
+        if not clustered:
+            df = _cluster_for_store(df, ["p", "bucket_date"])
         (
-            _cluster_for_store(df, ["p", "bucket_date"])
-            .write.mode("overwrite")
+            df.write.mode("overwrite")
             .partitionBy("p", "bucket_date")
             .parquet(str(staging))
         )
@@ -416,13 +420,10 @@ class TieredStore:
         byte-identical to one computed directly from raw (the cascade
         invariant).
 
-        Scale note: ONE Spark job per tier — every ``p=`` partition is
-        read with the partition column, the shard id rides in the
-        series ``kind`` through a single cascade pass (exactly the
-        run_rollup_job trick), and the staged output is promoted with
-        atomic per-partition replaces. The previous revision submitted
-        one serialized driver job per partition (256 submissions at
-        P=256). ``since`` (inclusive YYYY-MM-DD) makes the run
+        ONE Spark job and ONE shuffle per tier: the cascade partitions
+        the fine rows (read with ``p``) by output leaf (p, bucket_date),
+        and its already-clustered output is promoted with per-leaf
+        swap_dir. ``since`` (inclusive YYYY-MM-DD) makes the run
         incremental: every tier bucket nests within one date, so
         recomputing only dates >= since is exact, the bucket_date
         partition filter prunes the fine-tier scan to those dates, and
@@ -440,22 +441,11 @@ class TieredStore:
             # partition-column filter: prunes the scan to date dirs
             # >= since before any row is read
             fine = fine.filter(F.col("bucket_date") >= F.lit(since))
-        fine = (
-            fine
-            .withColumn("tier", F.lit(from_tier))
-            .withColumn("kind", F.concat(F.col("p").cast("string"),
-                                         F.lit("|"), F.col("kind")))
-            .drop("bucket_date", "p")
-        )
-        coarse = cascade(fine, to_tier, max_points=max_points)
-        parts = F.split(F.col("kind"), "\\|", 2)
-        out = (
-            coarse.withColumn("p", parts.getItem(0).cast("int"))
-            .withColumn("kind", parts.getItem(1))
+        out = cascade(fine, to_tier, max_points=max_points, shard_col="p") \
             .withColumn("bucket_date", F.to_date("bucket_ts"))
-        )
         return self._stage_promote(out, to_tier,
-                                   f"compact-{from_tier}-{to_tier}")
+                                   f"compact-{from_tier}-{to_tier}",
+                                   clustered=True)
 
     def upgrade_tier(self, spark: SparkSession, tier: str,
                      max_points: int | None = None) -> int:

@@ -42,25 +42,11 @@ def decode_points(rollup_df: DataFrame) -> DataFrame:
         for pdf in iterator:
             if len(pdf) == 0:
                 continue
-            out_kind, out_key, out_metric, out_ts, out_v = [], [], [], [], []
-            for kind, key, metric, chunk in zip(
-                    pdf["kind"], pdf["series_key"], pdf["metric"],
-                    pdf["chunk"]):
-                ts_us, v = codec.decode_all(bytes(chunk))
-                out_kind.append(np.repeat(kind, len(ts_us)))
-                out_key.append(np.repeat(key, len(ts_us)))
-                out_metric.append(np.repeat(metric, len(ts_us)))
-                out_ts.append(ts_us)
-                out_v.append(v)
-            if not out_ts:
-                continue
+            ts_us, v, counts = codec.decode_many(pdf["chunk"])
             yield pd.DataFrame({
-                "kind": np.concatenate(out_kind),
-                "series_key": np.concatenate(out_key),
-                "metric": np.concatenate(out_metric),
-                "ts_us": np.concatenate(out_ts).astype(np.int64),
-                "v": np.concatenate(out_v),
-            })
+                **{c: np.repeat(pdf[c].to_numpy(), counts)
+                   for c in ("kind", "series_key", "metric")},
+                "ts_us": ts_us, "v": v})
 
     return (rollup_df.select("kind", "series_key", "metric", "chunk")
             .mapInPandas(decode, _POINTS_US_SCHEMA)

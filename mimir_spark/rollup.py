@@ -11,9 +11,12 @@ is the single writer) and its batch-flush postings write
 (AtomicIndex.java:940-1083).
 
 The 1m->1h->1d *cascade* (re-aggregation from a finer tier, chunk
-merge included) is also provided — it is the LSM compact analogue
-(AtomicIndex.java:1280-1366) and doubles as the differential test of
-the one-pass path: rollup_1h(from raw) == cascade(rollup_1m).
+merge included) is the LSM compact analogue
+(AtomicIndex.java:1280-1366) and runs on the same kernel: fine rows
+are sorted by (series, bucket, chunk), their chunks decoded in batch
+(codec.decode_many) and the points re-rolled at the coarse width, so
+rollup_1h(from raw) == cascade(rollup_1m) bit for bit, aggregates
+included — it doubles as the differential test of the one-pass path.
 """
 
 from __future__ import annotations
@@ -46,31 +49,6 @@ POINTS_SCHEMA = ("kind string, series_key string, metric string, "
 # ---------------------------------------------------------------------------
 # one-pass multi-tier rollup (the production path)
 # ---------------------------------------------------------------------------
-
-def _encode_group_chunks(ts_us, v, starts, max_points):
-    """Encode per-group chunks; groups above ``max_points`` become
-    concatenated self-delimiting sub-chunks (codec.decode_all reads
-    them back) so one hot (series, bucket) group never materializes an
-    unbounded array in the codec."""
-    if not max_points:
-        return codec.encode_many(ts_us, v, starts)
-    n = len(ts_us)
-    ends = np.append(starts[1:], n)
-    sizes = ends - starts
-    nsub = np.maximum(1, -(-sizes // max_points))
-    total = int(nsub.sum())
-    if total == len(starts):
-        return codec.encode_many(ts_us, v, starts)
-    group_idx = np.repeat(np.arange(len(starts)), nsub)
-    k = np.arange(total) - np.repeat(np.cumsum(nsub) - nsub, nsub)
-    sub_starts = starts[group_idx] + k * max_points
-    chunks = codec.encode_many(ts_us, v, sub_starts)
-    out, pos = [], 0
-    for cnt in nsub.tolist():
-        out.append(b"".join(chunks[pos:pos + cnt]))
-        pos += cnt
-    return out
-
 
 def _change_mask(arrays):
     """True where any of ``arrays`` differs from the previous row (row
@@ -106,8 +84,8 @@ def rollup_groups(ts_us, v, series_start, units, max_points=None):
             "min_v": np.minimum.reduceat(v, starts),
             "max_v": np.maximum.reduceat(v, starts),
             "last_v": v[ends - 1],
-            "chunk": pd.Series(_encode_group_chunks(ts_us, v, starts,
-                                                    max_points),
+            "chunk": pd.Series(codec.encode_groups(ts_us, v, starts,
+                                                   max_points),
                                dtype=object),
         }
 
@@ -149,12 +127,15 @@ def _join(parts):
 
 
 def _carry_fn(tiers, series_cols, block):
-    """mapInPandas body: ``block(cols)`` over each run of whole groups."""
+    """mapInPandas body: ``block(cols)`` over each run of whole groups
+    (a block may return None: nothing to emit)."""
     coarsest = TIER_US[tiers[-1]]
 
     def process(iterator):
         for cols in _whole_groups(iterator, coarsest, series_cols):
-            yield block(cols)
+            out = block(cols)
+            if out is not None:
+                yield out
 
     return process
 
@@ -456,48 +437,68 @@ def rollup_aggs(points: DataFrame, tier: str,
 # tier cascade (compact analogue + differential check of the one-pass path)
 # ---------------------------------------------------------------------------
 
-def _merge_chunks_udf(max_points: int | None = None):
-    # built lazily: pandas_udf needs an active SparkSession to parse
-    # its return type
-    @F.pandas_udf("binary")
-    def merge_udf(chunk_lists: pd.Series) -> pd.Series:
-        def merge(lst):
-            return codec.merge_chunks([bytes(e["chunk"]) for e in lst],
-                                      max_points=max_points)
-        return chunk_lists.map(merge)
+def _make_cascade_fn(to_tier, series_cols, max_points=None):
+    """mapInPandas body over fine-tier rows (series_cols, ts = bucket
+    epoch micros, chunk) sorted by (series, ts, chunk): each run of
+    whole coarse groups is decoded in row order and rolled up again
+    by the kernel at the coarse width. Groups whose chunks hold no
+    point (header-only) emit no row."""
+    unit = TIER_US[to_tier]
 
-    return merge_udf
+    def block(cols):
+        ts_us, v, counts = codec.decode_many(cols["chunk"])
+        if not len(ts_us):
+            return None
+        row = np.repeat(np.arange(len(counts)), counts)
+        series = np.cumsum(_change_mask([cols[c] for c in series_cols]))
+        (starts, aggs), = rollup_groups(ts_us, v, _change_mask([series[row]]),
+                                        [unit], max_points)
+        aggs["bucket_ts"] = aggs["bucket_ts"].astype(np.int64)
+        first = row[starts]
+        return pd.DataFrame({"tier": to_tier,
+                             **{c: cols[c][first] for c in series_cols},
+                             **aggs})
+
+    return _carry_fn((to_tier,), series_cols, block)
 
 
 def cascade(rollup_df: DataFrame, to_tier: str,
-            max_points: int | None = None) -> DataFrame:
-    """Re-aggregate a finer tier into ``to_tier`` (e.g. 1m -> 1h).
+            max_points: int | None = None,
+            shard_col: str | None = None) -> DataFrame:
+    """Re-aggregate a finer tier into ``to_tier`` (e.g. 1m -> 1h) in
+    one sorted pass on the rollup kernel. Fine rows are
+    hash-partitioned by output group and sorted by
+    (series, bucket_ts, chunk); each batch of whole coarse groups is
+    batch-decoded (codec.decode_many) and re-rolled by
+    ``rollup_groups`` with one encode call. The points reach the
+    kernel in the one-pass writer's order, so chunks are
+    byte-identical and aggregates bit-equal to a rollup from raw; the
+    ``chunk`` tie-break orders two rows of one fine bucket (a batch
+    file and a streamed file of one leaf) by their bytes. Buckets are
+    epoch micros, as in the kernel, under any session timezone.
 
-    Aggregates combine associatively; chunks merge in bucket order
-    (sort_array on struct sorts by bucket_ts first), so
-    decode(cascade chunk) == decode(direct-from-raw chunk).
-
-    ``max_points`` bounds the re-encoded chunk exactly like the one-pass
-    writer: merged groups above the bound become sub-chunk containers,
-    so compaction cannot materialize an unbounded array either.
+    ``max_points`` bounds re-encoded chunks exactly like the one-pass
+    writer (sub-chunk containers). ``shard_col`` (the store's ``p``)
+    is kept as a leading series column and, with the coarse bucket's
+    date, is the partition key: each (shard, bucket_date) output leaf
+    is then whole in one partition, series-sorted, and is written
+    without a second shuffle.
     """
-    bucket = F.date_trunc(TIER_TRUNC[to_tier], F.col("bucket_ts")).alias("bucket_ts")
+    series = ([shard_col] if shard_col else []) + _SERIES_COLS
+    fine = rollup_df.select(*series, F.unix_micros("bucket_ts").alias("ts"),
+                            "chunk")
+    bucket = F.col("ts") - F.pmod(F.col("ts"), F.lit(TIER_US[to_tier]))
+    by_series = [F.col(c) for c in _SERIES_COLS]
+    leaf = ([F.col(shard_col), F.to_date(F.timestamp_micros(bucket))]
+            if shard_col else by_series + [bucket])
+    order = leaf + by_series if shard_col else by_series
+    schema = ROLLUP_SCHEMA.replace("bucket_ts timestamp", "bucket_ts long") \
+        + (f", {shard_col} int" if shard_col else "")
     return (
-        rollup_df.groupBy(*_SERIES_COLS, bucket)
-        .agg(
-            F.sum("cnt").alias("cnt"),
-            F.sum("sum_v").alias("sum_v"),
-            F.min("min_v").alias("min_v"),
-            F.max("max_v").alias("max_v"),
-            F.max_by("last_v", F.col("bucket_ts")).alias("last_v"),
-            F.sort_array(
-                F.collect_list(F.struct(F.col("bucket_ts"), F.col("chunk")))
-            ).alias("_chunks"),
-        )
-        .withColumn("chunk", _merge_chunks_udf(max_points)(F.col("_chunks")))
-        .withColumn("tier", F.lit(to_tier))
-        .select("tier", *_SERIES_COLS, "bucket_ts", "cnt", "sum_v",
-                "min_v", "max_v", "last_v", "chunk")
+        fine.repartition(*leaf)
+        .sortWithinPartitions(*order, "ts", "chunk")
+        .mapInPandas(_make_cascade_fn(to_tier, series, max_points), schema)
+        .withColumn("bucket_ts", F.timestamp_micros("bucket_ts"))
     )
 
 

@@ -112,19 +112,8 @@ class IcebergTieredStore:
             # recomputing only dates >= since is exact; bucket_date is
             # an Iceberg partition column, so this prunes at planning
             fine = fine.filter(F.col("bucket_date") >= F.lit(since))
-        fine = (
-            fine
-            .withColumn("kind", F.concat(F.col("p").cast("string"),
-                                         F.lit("|"), F.col("kind")))
-            .drop("bucket_date", "p")
-        )
-        coarse = cascade(fine, to_tier, max_points=max_points)
-        parts = F.split(F.col("kind"), "\\|", 2)
-        out = (
-            coarse.withColumn("p", parts.getItem(0).cast("int"))
-            .withColumn("kind", parts.getItem(1))
+        out = cascade(fine, to_tier, max_points=max_points, shard_col="p") \
             .withColumn("bucket_date", F.to_date("bucket_ts"))
-        )
         # leaf-scoped conditional overwrite: replace ONLY the
         # (p, bucket_date) combinations the cascade produced — a
         # whole-tier (or whole-shard) overwrite would wipe coarse

@@ -267,13 +267,17 @@ def _append_stream_metrics(sidecar_dir, app_id: str, batch_id: int,
     sidecar_dir.mkdir(parents=True, exist_ok=True)
     line = json.dumps({"app": app_id, "batch": batch_id, "date": date,
                        **stats})
-    with open(sidecar_dir / _STREAM_METRICS, "a") as f:
-        f.write(line + "\n")
+    with open(sidecar_dir / _STREAM_METRICS, "a+b") as f:
+        # a kill mid-append leaves a torn last line: end it first
+        f.seek(max(f.tell() - 1, 0))
+        torn = f.read(1) not in (b"", b"\n")
+        f.write(b"\n" * torn + line.encode() + b"\n")
 
 
 def read_stream_metrics(sidecar_dir) -> list[dict]:
     """Deduped per-(app, batch, date) metrics rows from a sidecar dir
-    (crash retries may append the same deterministic line twice)."""
+    (crash retries may append the same deterministic line twice, after
+    a torn one, which is skipped)."""
     import json
 
     path = sidecar_dir / _STREAM_METRICS
@@ -281,9 +285,11 @@ def read_stream_metrics(sidecar_dir) -> list[dict]:
         return []
     rows: dict = {}
     for line in path.read_text().splitlines():
-        if line.strip():
+        try:
             r = json.loads(line)
-            rows[(r["app"], r["batch"], r["date"])] = r
+        except ValueError:
+            continue
+        rows[(r["app"], r["batch"], r["date"])] = r
     return [rows[k] for k in sorted(rows)]
 
 # inverse of _bucket_ntz: NTZ UTC wall time -> instant, session-tz

@@ -1,5 +1,5 @@
 """Codec tests: roundtrip identity, scalar-vs-vectorized byte equality,
-multi-chunk consistency, merge invariant.
+multi-chunk consistency, batch decode ≡ per-chunk decode.
 
 Mirrors the reference's posting-list write/read invariant testing
 discipline (AtomicIndex.java:316-342 writes what the cluster view must
@@ -215,11 +215,57 @@ def test_encode_many_matches_per_group(data):
 def test_merge_is_concat_of_decodes():
     ts1, v1 = _as_arrays([0, 60, 120], [1.0, 2.0, float("nan")])
     ts2, v2 = _as_arrays([180, 240], [4.0, 4.0])
-    merged = codec.merge_chunks([codec.encode_chunk(ts1, v1), codec.encode_chunk(ts2, v2)])
+    flat_t, flat_v, counts = codec.decode_many(
+        [codec.encode_chunk(ts1, v1), codec.encode_chunk(ts2, v2)])
+    assert counts.tolist() == [3, 2]
+    merged = codec.encode_chunk(flat_t, flat_v)
     mt, mv = codec.decode_chunk(merged)
     assert np.array_equal(mt, np.concatenate([ts1, ts2]))
     assert _bits_equal(mv, np.concatenate([v1, v2]))
     assert merged == codec.encode_chunk(np.concatenate([ts1, ts2]), np.concatenate([v1, v2]))
+
+
+_ODD_VALUES = [0.0, -0.0, float("nan"), float("inf"), float("-inf"), 1.5,
+               -2.25, 5e-324]
+
+
+def _draw_buffer(data):
+    """One chunk buffer of a random kind: header-only, single-point,
+    multi-point (small or raw-64-bit delta-of-delta), legacy v0, or a
+    max_points sub-chunk container mixing v0 and v1."""
+    kind = data.draw(st.sampled_from(
+        ["empty", "single", "multi", "raw_dod", "v0", "container"]))
+    n = {"empty": 0, "single": 1}.get(kind) or data.draw(st.integers(2, 12))
+    base = data.draw(st.integers(-2**40, 2**40))
+    step = 10**12 if kind == "raw_dod" else 60_000_000
+    ts = base + np.cumsum(np.array(data.draw(st.lists(
+        st.integers(0, step), min_size=n, max_size=n)), dtype=np.int64))
+    vals = np.array(data.draw(st.lists(
+        st.one_of(st.sampled_from(_ODD_VALUES),
+                  st.floats(allow_nan=True, width=64)),
+        min_size=n, max_size=n)), dtype=np.float64)
+    if kind == "v0":
+        return codec.encode_chunk_v0(ts, vals)
+    if kind == "container":
+        cut = data.draw(st.integers(1, n - 1))
+        return codec.encode_chunk_v0(ts[:cut], vals[:cut]) + b"".join(
+            codec.encode_many(ts[cut:], vals[cut:],
+                              np.arange(0, n - cut, 3, dtype=np.int64)))
+    return codec.encode_chunk(ts, vals)
+
+
+@given(st.data())
+@settings(max_examples=150, deadline=None)
+def test_decode_many_is_concat_of_decode_all(data):
+    bufs = [_draw_buffer(data) for _ in range(data.draw(st.integers(0, 12)))]
+    ts, vals, counts = codec.decode_many(bufs)
+    decoded = [codec.decode_all(b) for b in bufs]
+    assert counts.tolist() == [len(t) for t, _ in decoded]
+    assert ts.dtype == np.int64 and vals.dtype == np.float64
+    want_t = np.concatenate([np.zeros(0, np.int64)] + [t for t, _ in decoded])
+    want_v = np.concatenate([np.zeros(0)] + [v for _, v in decoded])
+    assert np.array_equal(ts, want_t)
+    assert _bits_equal(vals, want_v)
 
 
 def test_bad_magic_rejected():

@@ -120,6 +120,33 @@ def test_compact_tier_equals_direct(spark, source, tmp_path):
     assert all(bytes(x) == bytes(y) for x, y in zip(a["chunk"], b["chunk"]))
 
 
+def test_compact_tier_one_shuffle(spark, source, tmp_path):
+    """Compaction is one sorted pass on the rollup kernel: the executed
+    write plan has exactly one shuffle exchange, no JVM collect_list
+    aggregate and no per-row Python UDF."""
+    import re
+
+    store = TieredStore(tmp_path / "s")
+    run_rollup_job(spark, source, store, "j", num_partitions=2,
+                   tiers=("1m",))
+    status = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        ex = status.executionsList()
+        return [ex.apply(i) for i in range(ex.size())]
+
+    seen = max((e.executionId() for e in executions()), default=-1)
+    assert store.compact_tier(spark, "1m", "1h") == 2
+    plans = [e.physicalPlanDescription() for e in executions()
+             if e.executionId() > seen]
+    assert plans
+    final = [p.split("== Initial Plan ==")[0] for p in plans]
+    assert sum(len(re.findall(r"\bExchange \(", p)) for p in final) == 1
+    for op in ("ObjectHashAggregate", "collect_list", "ArrowEvalPython"):
+        assert not any(op in p for p in plans), op
+
+
 def test_compact_preserves_expired_fine_dates(spark, source, tmp_path):
     """Tiered retention's core contract: re-compacting after the fine
     tier expired its old dates must NOT destroy the coarse tier's

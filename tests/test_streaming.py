@@ -911,6 +911,54 @@ def test_chunk_sink_mixed_leaf_reads_one_schema(spark, t_small_df,
         spark.conf.set(tz_key, prev)
 
 
+def test_compact_duplicate_minutes_in_one_leaf(spark, t_small_df, tmp_path):
+    """A 1m leaf holding a batch-job file and a streamed file that
+    share (series, minute) buckets compacts to the same bytes every
+    time, the two minutes merged in (bucket_ts, chunk bytes) order."""
+    import numpy as np
+
+    from mimir_spark import codec
+    from mimir_spark.lineage import TieredStore, run_rollup_job
+    from mimir_spark.streaming.rollup_stream import chunk_store_sink
+
+    store = TieredStore(tmp_path / "dup")
+    # one shard on both writers, so every streamed row lands in the
+    # leaf that holds its batch twin
+    run_rollup_job(spark, lambda: t_small_df, store, "night",
+                   num_partitions=1, tiers=("1m",))
+    cols = ["kind", "series_key", "metric", "bucket_ts", "cnt", "sum_v",
+            "min_v", "max_v", "last_v", "chunk"]
+    batch = store.read_tier(spark, "1m").select(*cols).toPandas()
+    twin = batch.iloc[::3].copy()
+    chunks = []
+    for i, c in enumerate(twin["chunk"]):
+        ts, v = codec.decode_all(bytes(c))
+        chunks.append(codec.encode_chunk(ts, v + (0.5 if i % 2 else -0.5)))
+    twin["chunk"] = chunks
+    replay = spark.createDataFrame(twin, store.read_tier(spark, "1m")
+                                   .select(*cols).schema)
+    chunk_store_sink(store, "1m", num_partitions=1)(
+        replay.withColumn("bucket_ts",
+                          F.expr("cast(bucket_ts as timestamp_ntz)")), 0)
+    assert any(store.tier_dir("1m").glob("p=0/bucket_date=*/stream-*"))
+
+    fine = pd.concat([batch, twin], ignore_index=True)
+    fine["hour"] = fine["bucket_ts"].dt.floor("h")
+    want = {}
+    for key, g in fine.groupby(["kind", "series_key", "metric", "hour"]):
+        parts = sorted(zip(g["bucket_ts"], map(bytes, g["chunk"])))
+        ts, v = zip(*(codec.decode_all(c) for _, c in parts))
+        want[key] = codec.encode_chunk(np.concatenate(ts), np.concatenate(v))
+
+    runs = []
+    for _ in range(2):
+        store.compact_tier(spark, "1m", "1h")
+        got = store.read_tier(spark, "1h").toPandas()
+        runs.append({(r.kind, r.series_key, r.metric, r.bucket_ts):
+                     bytes(r.chunk) for r in got.itertuples(index=False)})
+    assert runs[0] == runs[1] == want
+
+
 def test_chunk_sink_crash_between_files_and_ledger(spark, tmp_path,
                                                    monkeypatch):
     """Failpoint: the batch's files have moved into the leaves but the

@@ -30,7 +30,9 @@ from hypothesis import strategies as st
 
 from mimir_spark import codec
 from mimir_spark.rollup import TIER_US
-from mimir_spark.streaming.rollup_stream import _make_sharded_chunk_fn
+from mimir_spark.streaming.rollup_stream import (
+    _STREAM_METRICS, _append_stream_metrics, _make_sharded_chunk_fn,
+    read_stream_metrics)
 
 UNIT = TIER_US["1m"]
 
@@ -304,3 +306,18 @@ def test_valid_event_time_guard(spark, t_small, tmp_path):
 
 if __name__ == "__main__":
     pytest.main([__file__, "-q"])
+
+
+def test_torn_metrics_line_is_ended_and_skipped(tmp_path):
+    """A kill mid-append leaves a prefix of a line without its newline;
+    the next append must start on a fresh line and the reader must skip
+    the torn one, keeping every whole line."""
+    _append_stream_metrics(tmp_path, "app", 0, "2024-01-01", {"rows_in": 3})
+    path = tmp_path / _STREAM_METRICS
+    whole = path.read_bytes()
+    torn = whole[:20]
+    path.write_bytes(whole + torn)
+    _append_stream_metrics(tmp_path, "app", 1, "2024-01-01", {"rows_in": 5})
+    assert path.read_bytes().startswith(whole + torn + b"\n")
+    rows = read_stream_metrics(tmp_path)
+    assert [(r["batch"], r["rows_in"]) for r in rows] == [(0, 3), (1, 5)]
