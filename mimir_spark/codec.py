@@ -603,31 +603,13 @@ def decode_many(buffers) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Decode many chunk buffers (each a chunk or a sub-chunk
     container) -> flat (ts, values) arrays in buffer order plus each
     buffer's point count: buffer i's ``decode_all`` is the slice of
-    ``counts[i]`` points after ``counts[:i].sum()``.
-
-    Single-point chunks — the encoder's fixed 30-byte layout, most of
-    a fine tier — are decoded together in one numpy gather; every
-    other buffer (multi-point, legacy v0, sub-chunk container) goes
-    through ``decode_all``."""
-    bufs = [bytes(b) for b in buffers]
-    lens = np.fromiter(map(len, bufs), dtype=np.int64, count=len(bufs))
-    cand = np.flatnonzero(lens == _SINGLE_LEN)
-    rec = np.frombuffer(b"".join([bufs[i] for i in cand]),
-                        dtype=np.uint8).reshape(len(cand), _SINGLE_LEN)
-    ok = (rec[:, :HEADER_LEN] == _SINGLE_HEADER).all(axis=1)
-    single, rec = cand[ok], rec[ok]
-    rest = np.setdiff1d(np.arange(len(bufs)), single)
-    parts = [decode_all(bufs[i]) for i in rest.tolist()]
-    counts = np.ones(len(bufs), dtype=np.int64)
-    counts[rest] = [len(t) for t, _ in parts]
-    offs = np.cumsum(counts) - counts
-    ts = np.empty(int(counts.sum()), dtype=np.int64)
-    bits = np.empty(len(ts), dtype=np.uint64)  # NaN payloads kept as bits
-    ts[offs[single]] = rec[:, HEADER_LEN:HEADER_LEN + 8].copy().view(">i8").ravel()
-    bits[offs[single]] = rec[:, HEADER_LEN + 8:].copy().view(">u8").ravel()
-    for o, (t, v) in zip(offs[rest].tolist(), parts):
-        ts[o:o + len(t)], bits[o:o + len(t)] = t, v.view(np.uint64)
-    return ts, bits.view(np.float64), counts
+    ``counts[i]`` points after ``counts[:i].sum()``."""
+    parts = [decode_all(bytes(b)) for b in buffers]
+    counts = np.array([len(t) for t, _ in parts], dtype=np.int64)
+    if not parts:
+        return np.empty(0, np.int64), np.empty(0, np.float64), counts
+    return (np.concatenate([t for t, _ in parts]),
+            np.concatenate([v for _, v in parts]), counts)
 
 
 # ---------------------------------------------------------------------------

@@ -386,15 +386,18 @@ class TieredStore:
         the coarser retention exists to keep. ``whole_tier`` swaps the
         staged tree in for the whole tier instead (a rebuild: leaves
         the output lacks are dropped). ``clustered``: ``df`` already
-        holds each leaf whole in one partition, series-sorted (the
-        cascade's output), so it is written without another shuffle.
+        holds each leaf whole in one partition (the cascade's output),
+        so it is only sorted within partitions, not shuffled again.
         Idempotent: re-running after a crash converges. Returns the
         number of ``p=`` partitions touched."""
         staging = self.root / "_staging" / f"maint-{name}"
         if staging.exists():
             shutil.rmtree(staging)
-        if not clustered:
-            df = _cluster_for_store(df, ["p", "bucket_date"])
+        # clustered: sort in place, no Exchange. The write's own sort
+        # is on (p, bucket_date) only and keeps the series order only
+        # while a leaf fits in memory; this one satisfies it instead
+        df = (df.sortWithinPartitions("p", "bucket_date", *_STORE_SORT)
+              if clustered else _cluster_for_store(df, ["p", "bucket_date"]))
         (
             df.write.mode("overwrite")
             .partitionBy("p", "bucket_date")
@@ -441,7 +444,7 @@ class TieredStore:
             # partition-column filter: prunes the scan to date dirs
             # >= since before any row is read
             fine = fine.filter(F.col("bucket_date") >= F.lit(since))
-        out = cascade(fine, to_tier, max_points=max_points, shard_col="p") \
+        out = cascade(fine, to_tier, max_points=max_points) \
             .withColumn("bucket_date", F.to_date("bucket_ts"))
         return self._stage_promote(out, to_tier,
                                    f"compact-{from_tier}-{to_tier}",

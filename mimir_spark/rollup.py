@@ -463,12 +463,12 @@ def _make_cascade_fn(to_tier, series_cols, max_points=None):
 
 
 def cascade(rollup_df: DataFrame, to_tier: str,
-            max_points: int | None = None,
-            shard_col: str | None = None) -> DataFrame:
+            max_points: int | None = None) -> DataFrame:
     """Re-aggregate a finer tier into ``to_tier`` (e.g. 1m -> 1h) in
     one sorted pass on the rollup kernel. Fine rows are
-    hash-partitioned by output group and sorted by
-    (series, bucket_ts, chunk); each batch of whole coarse groups is
+    hash-partitioned by output leaf (store shard ``p`` when the frame
+    carries it, plus the coarse bucket's date) and sorted by leaf,
+    series, bucket_ts and chunk; each batch of whole coarse groups is
     batch-decoded (codec.decode_many) and re-rolled by
     ``rollup_groups`` with one encode call. The points reach the
     kernel in the one-pass writer's order, so chunks are
@@ -478,25 +478,21 @@ def cascade(rollup_df: DataFrame, to_tier: str,
     epoch micros, as in the kernel, under any session timezone.
 
     ``max_points`` bounds re-encoded chunks exactly like the one-pass
-    writer (sub-chunk containers). ``shard_col`` (the store's ``p``)
-    is kept as a leading series column and, with the coarse bucket's
-    date, is the partition key: each (shard, bucket_date) output leaf
-    is then whole in one partition, series-sorted, and is written
-    without a second shuffle.
+    writer (sub-chunk containers). A store frame's ``p`` is kept as a
+    leading series column, so each (p, bucket_date) output leaf is
+    whole in one partition and is written without a second shuffle.
     """
-    series = ([shard_col] if shard_col else []) + _SERIES_COLS
+    shard = ["p"] if "p" in rollup_df.columns else []
+    series = shard + _SERIES_COLS
     fine = rollup_df.select(*series, F.unix_micros("bucket_ts").alias("ts"),
                             "chunk")
     bucket = F.col("ts") - F.pmod(F.col("ts"), F.lit(TIER_US[to_tier]))
-    by_series = [F.col(c) for c in _SERIES_COLS]
-    leaf = ([F.col(shard_col), F.to_date(F.timestamp_micros(bucket))]
-            if shard_col else by_series + [bucket])
-    order = leaf + by_series if shard_col else by_series
+    leaf = [*shard, F.to_date(F.timestamp_micros(bucket))]
     schema = ROLLUP_SCHEMA.replace("bucket_ts timestamp", "bucket_ts long") \
-        + (f", {shard_col} int" if shard_col else "")
+        + (", p int" if shard else "")
     return (
         fine.repartition(*leaf)
-        .sortWithinPartitions(*order, "ts", "chunk")
+        .sortWithinPartitions(*leaf, *_SERIES_COLS, "ts", "chunk")
         .mapInPandas(_make_cascade_fn(to_tier, series, max_points), schema)
         .withColumn("bucket_ts", F.timestamp_micros("bucket_ts"))
     )

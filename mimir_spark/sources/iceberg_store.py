@@ -112,7 +112,7 @@ class IcebergTieredStore:
             # recomputing only dates >= since is exact; bucket_date is
             # an Iceberg partition column, so this prunes at planning
             fine = fine.filter(F.col("bucket_date") >= F.lit(since))
-        out = cascade(fine, to_tier, max_points=max_points, shard_col="p") \
+        out = cascade(fine, to_tier, max_points=max_points) \
             .withColumn("bucket_date", F.to_date("bucket_ts"))
         # leaf-scoped conditional overwrite: replace ONLY the
         # (p, bucket_date) combinations the cascade produced — a

@@ -145,6 +145,15 @@ def test_compact_tier_one_shuffle(spark, source, tmp_path):
     assert sum(len(re.findall(r"\bExchange \(", p)) for p in final) == 1
     for op in ("ObjectHashAggregate", "collect_list", "ArrowEvalPython"):
         assert not any(op in p for p in plans), op
+    # the sort under the write orders each leaf by series: a sort on
+    # (p, bucket_date) alone keeps the series order only while a leaf
+    # fits in memory
+    write = next(p for p in plans if "WriteFiles" in p)
+    node = re.search(r"WriteFiles \(\d+\)\n\s*\+- \*? ?Sort \((\d+)\)",
+                     write).group(1)
+    args = re.search(rf"\n\({node}\) Sort[^\n]*\n[^\n]*\nArguments: "
+                     r"([^\n]*)", write).group(1)
+    assert "series_key" in args.split("bucket_date")[1], args
 
 
 def test_compact_preserves_expired_fine_dates(spark, source, tmp_path):

@@ -304,10 +304,6 @@ def test_valid_event_time_guard(spark, t_small, tmp_path):
         assert bytes(a) == bytes(b)
 
 
-if __name__ == "__main__":
-    pytest.main([__file__, "-q"])
-
-
 def test_torn_metrics_line_is_ended_and_skipped(tmp_path):
     """A kill mid-append leaves a prefix of a line without its newline;
     the next append must start on a fresh line and the reader must skip
@@ -321,3 +317,7 @@ def test_torn_metrics_line_is_ended_and_skipped(tmp_path):
     assert path.read_bytes().startswith(whole + torn + b"\n")
     rows = read_stream_metrics(tmp_path)
     assert [(r["batch"], r["rows_in"]) for r in rows] == [(0, 3), (1, 5)]
+
+
+if __name__ == "__main__":
+    pytest.main([__file__, "-q"])
