@@ -30,6 +30,7 @@ from __future__ import annotations
 import argparse
 import pathlib
 import sys
+from urllib.parse import urlsplit
 
 sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent.parent))
 
@@ -69,6 +70,25 @@ def _print_status(store_root: str) -> int:
         out["tiers"][side.name] = {"dates": dates, "totals": totals}
     print(json.dumps(out), flush=True)
     return 0
+
+
+def checkpoint_location(root: str, name: str) -> str:
+    """Query ``name``'s checkpoint dir under ``root``, joined as
+    strings: pathlib would fold ``hdfs://nn:8020/ck`` into
+    ``hdfs:/nn:8020/ck``."""
+    return f"{root.rstrip('/')}/{name}"
+
+
+def pick_checkpoint_manager(spark, root: str) -> None:
+    """get_spark routes checkpoint files through Hadoop's FileSystem
+    API, whose check-then-rename on ``file:`` is what FileContext does
+    there too. On other schemes (HDFS) FileContext's non-overwriting
+    rename is atomic, so a checkpoint there gets Spark's default
+    manager back."""
+    from mimir_spark.session import CHECKPOINT_MANAGER_KEY
+
+    if urlsplit(root).scheme not in ("", "file"):
+        spark.conf.unset(CHECKPOINT_MANAGER_KEY)
 
 
 def main(argv=None) -> int:
@@ -150,9 +170,9 @@ def main(argv=None) -> int:
 
     spark = get_spark("stream-job", cpus=args.cpus)
     store = TieredStore(args.store)
-    ckpt_root = pathlib.Path(
-        args.checkpoint
-        or str(store.root / "_streaming" / f"checkpoint-{args.tier}"))
+    ckpt_root = args.checkpoint or \
+        str(store.root / "_streaming" / f"checkpoint-{args.tier}")
+    pick_checkpoint_manager(spark, ckpt_root)
 
     def reader():
         r = spark.readStream.schema(TRANSCRIPT_SCHEMA_NTZ)
@@ -164,7 +184,8 @@ def main(argv=None) -> int:
 
     def start(df, sink, name):
         w = (df.writeStream.outputMode("append").foreachBatch(sink)
-             .option("checkpointLocation", str(ckpt_root / name))
+             .option("checkpointLocation",
+                     checkpoint_location(ckpt_root, name))
              .queryName(name))
         if args.once:
             w = w.trigger(availableNow=True)

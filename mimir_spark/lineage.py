@@ -467,10 +467,12 @@ class TieredStore:
                 lambda b: _codec.upgrade_chunk(bytes(b), max_points))
 
         src_dir = self.tier_dir(tier)
-        # the tier is its own source: a leaf a crashed upgrade left in
-        # its .old must be back before the read, or the re-run drops it
-        for old in src_dir.glob("p=*/.old-*"):
-            heal_swap(old.with_name(old.name.removeprefix(".old-")))
+        # the tier is its own source: a shard a crashed rollup job left
+        # in its .old, then a leaf a crashed upgrade left in its .old,
+        # must be back before the read, or this upgrade drops it
+        for pattern in (".old-p=*", "p=*/.old-*"):
+            for old in list(src_dir.glob(pattern)):
+                heal_swap(old.with_name(old.name.removeprefix(".old-")))
         if not any(src_dir.glob("p=*")):
             return 0
         df = (

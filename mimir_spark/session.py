@@ -16,6 +16,9 @@ if TYPE_CHECKING:
     from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CHECKPOINT_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+FS_CHECKPOINT_MANAGER = ("org.apache.spark.sql.execution.streaming."
+                         "checkpointing.FileSystemBasedCheckpointFileManager")
 
 
 def get_spark(
@@ -51,6 +54,15 @@ def get_spark(
         # reaches C2. defaultJavaOptions, so a caller's
         # extraJavaOptions adds to the flag instead of replacing it.
         .config("spark.driver.defaultJavaOptions", "-XX:CICompilerCount=2")
+        # streaming checkpoint and state-store files go through
+        # Hadoop's FileSystem API instead of FileContext: FileContext's
+        # rename asks for both paths' link status, which RawLocalFileSystem
+        # answers without the native Hadoop library by forking a
+        # `readlink` per path (about 156 forks per live-tail
+        # micro-batch, all failing). On file: both managers end in the
+        # same check-then-rename. stream_job puts Spark's default back
+        # for other schemes, where FileContext's rename is atomic.
+        .config(CHECKPOINT_MANAGER_KEY, FS_CHECKPOINT_MANAGER)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.filterPushdown", "true")
         # zstd parquet output (guide §6): ~38% smaller than snappy on

@@ -300,3 +300,38 @@ def test_upgrade_cut_between_leaf_renames_keeps_every_row(
             _store(cut).upgrade_tier(spark, "1h")
     _store(cut).upgrade_tier(spark, "1h")
     _assert_same_store(_state(cut), _state(single), "upgrade re-run")
+
+
+def test_upgrade_heals_shard_a_rollup_job_left_aside(
+        spark, frames, tmp_path, monkeypatch):
+    """A rollup job killed inside swap_dir, after it moved a live
+    shard aside and before its replacement landed, leaves
+    ``.old-p=N`` in the tier dir. upgrade_tier reads the tier as its
+    own source, so it must roll that shard back before the read: the
+    upgraded tier holds every row of a single-shot upgrade."""
+    single, ws = tmp_path / "single", tmp_path / "ws"
+    _base(spark, frames, single)
+    shutil.copytree(single, ws)
+    _store(single).upgrade_tier(spark, "1h")
+
+    snap = tmp_path / "snap"
+
+    def kill(name):
+        if name == "swap_dir.moved_aside":
+            shutil.copytree(ws, snap)
+            raise Crash(name)
+
+    with monkeypatch.context() as m:
+        m.setattr(lineage, "_failpoint", kill)
+        with pytest.raises(Crash):
+            WRITERS["run_rollup_job"][1](spark, frames, ws)
+    tier = _store(snap).tier_dir("1h")
+    assert list(tier.glob(".old-p=*")), "the cut left no shard aside"
+    _store(snap).upgrade_tier(spark, "1h")
+
+    def tier_state(root):
+        return {k: v for k, v in _state(root).items()
+                if k.startswith("store/tier=1h")}
+
+    _assert_same_store(tier_state(snap), tier_state(single),
+                       "upgrade after a cut rollup job")

@@ -312,18 +312,30 @@ def test_stream_job_cli_once_and_rerun(spark, t_small_df, tmp_path,
     """stream_job --once drains the source into the store (chunk tier
     + sketch tier), the result serves query_range/distinct, and a
     SECOND --once run over the unchanged source is a no-op (checkpoint
-    + ledgers): no duplicate rows."""
+    + ledgers): no duplicate rows. A third run after a file lands
+    resumes from the checkpoint (offset and commit logs, restored
+    state): its chunk tier equals one --once over all the files."""
+    import shutil
+
     import stream_job
+    from pyspark.sql import functions as F
 
     from mimir_spark.read_path import query_range, query_range_distinct
 
+    rows = t_small_df.limit(4000)
+    # the appended file starts on an hour boundary after every
+    # earlier row: no 1h bucket spans both runs, no row of it is late
+    cut = F.col("ts") >= F.lit("2026-01-11 00:00:00").cast("timestamp")
     src = str(tmp_path / "sj_src")
-    t_small_df.limit(4000).repartition(3).write.parquet(src)
+    rows.filter(~cut).repartition(3).write.parquet(src)
     store_dir = str(tmp_path / "sj_store")
-    argv = ["--source", src, "--store", store_dir, "--tier", "1h",
-            "--once", "--distinct-sketch", "conv_id",
-            "--partitions", "3"]
-    assert stream_job.main(argv) == 0
+
+    def argv(source, store):
+        return ["--source", source, "--store", store, "--tier", "1h",
+                "--once", "--distinct-sketch", "conv_id",
+                "--partitions", "3"]
+
+    assert stream_job.main(argv(src, store_dir)) == 0
     s = TieredStore(store_dir)
     n1 = s.read_tier(spark, "1h").count()
     k1 = s.read_sketch_tier(spark, "1h").count()
@@ -334,16 +346,29 @@ def test_stream_job_cli_once_and_rerun(spark, t_small_df, tmp_path,
                                 kind="conv", tier="1h").count() > 0
 
     # re-run: the checkpoint has consumed the source; nothing merges
-    assert stream_job.main(argv) == 0
+    assert stream_job.main(argv(src, store_dir)) == 0
     assert s.read_tier(spark, "1h").count() == n1
     assert s.read_sketch_tier(spark, "1h").count() == k1
+
+    # resume with new data on the same checkpoint == one uninterrupted
+    # run over every file, chunk bytes included
+    rows.filter(cut).coalesce(1).write.mode("append").parquet(src)
+    assert stream_job.main(argv(src, store_dir)) == 0
+    once_dir = str(tmp_path / "sj_once")
+    shutil.copytree(src, str(tmp_path / "sj_all"))
+    assert stream_job.main(argv(str(tmp_path / "sj_all"), once_dir)) == 0
+    resumed = _canon(s.read_tier(spark, "1h").toPandas())
+    assert len(resumed) > n1
+    pd.testing.assert_frame_equal(
+        resumed, _canon(TieredStore(once_dir).read_tier(spark, "1h")
+                        .toPandas()))
+    n1 = len(resumed)
+    k1 = s.read_sketch_tier(spark, "1h").count()
 
     # --status: per-date ingest metrics in the _streaming sidecar must
     # reconcile with the store content (and the no-op rerun must not
     # have inflated them)
     import json
-
-    from pyspark.sql import functions as F
 
     capsys.readouterr()
     assert stream_job.main(["--store", store_dir, "--status"]) == 0
@@ -373,3 +398,33 @@ def test_stream_job_cli_once_and_rerun(spark, t_small_df, tmp_path,
     assert left == [led_dates[-1]]
     assert (led_dir / "metrics.jsonl").exists()
     assert s.read_tier(spark, "1h").count() > 0
+
+
+def test_stream_checkpoint_keeps_uri_and_picks_manager(spark):
+    """A --checkpoint URI keeps its scheme://authority in every query's
+    checkpoint location. Local checkpoints (file: URIs and plain paths)
+    keep the session's FileSystem manager; any other scheme gets
+    Spark's default back."""
+    import stream_job
+
+    from mimir_spark.session import (CHECKPOINT_MANAGER_KEY,
+                                     FS_CHECKPOINT_MANAGER)
+
+    for root in ("hdfs://nn:8020/ck", "hdfs://nn:8020/ck/"):
+        assert stream_job.checkpoint_location(root, "chunks") == \
+            "hdfs://nn:8020/ck/chunks"
+    assert stream_job.checkpoint_location("/data/ck", "sketch") == \
+        "/data/ck/sketch"
+
+    def manager():
+        return spark._jsparkSession.sessionState().newHadoopConf() \
+            .get(CHECKPOINT_MANAGER_KEY)
+
+    try:
+        for root in ("/data/ck", "ck", "file:/data/ck", "file:///data/ck"):
+            stream_job.pick_checkpoint_manager(spark, root)
+            assert manager() == FS_CHECKPOINT_MANAGER, root
+        stream_job.pick_checkpoint_manager(spark, "hdfs://nn:8020/ck")
+        assert manager() is None
+    finally:
+        spark.conf.set(CHECKPOINT_MANAGER_KEY, FS_CHECKPOINT_MANAGER)
