@@ -25,6 +25,7 @@ from __future__ import annotations
 import argparse
 import pathlib
 import sys
+from datetime import date
 
 sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent.parent))
 
@@ -79,6 +80,12 @@ def main(argv=None) -> int:
     retain_pairs = _pairs("--retain", args.retain)
     if retain_pairs and not args.as_of:
         ap.error("--retain needs --as-of (the logical run date)")
+    if args.since is not None:
+        try:
+            args.since = date.fromisoformat(args.since).isoformat()
+        except ValueError:
+            ap.error(f"--since must be a date YYYY-MM-DD, "
+                     f"got {args.since!r}")
     upgrades = [t for t in args.upgrade.split(",") if t]
 
     from mimir_spark.lineage import tiered_store

@@ -23,13 +23,17 @@ import json
 import os
 import shutil
 import time
+from datetime import date
 from pathlib import Path
 
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .rollup import TIER_US
+from .rollup import SERIES_COLS, TIER_US, cascade_groups
 
 LINEAGE_SCHEMA = (
     "job_id string, partition_id int, rows_in long, points_out long, "
@@ -41,7 +45,87 @@ LINEAGE_SCHEMA = (
 #: equality filter on the read path, bucket_ts last so each series'
 #: buckets are contiguous (best Gorilla-adjacent layout for range
 #: scans).
-_STORE_SORT = ["kind", "series_key", "metric", "bucket_ts"]
+_STORE_SORT = [*SERIES_COLS, "bucket_ts"]
+
+#: spark.sql.parquet.compression.codec -> pyarrow codec name; pyarrow
+#: writes neither lzo nor lz4_raw
+_ARROW_CODECS = {"none": "none", "uncompressed": "none",
+                 "snappy": "snappy", "gzip": "gzip", "brotli": "brotli",
+                 "lz4": "lz4", "zstd": "zstd"}
+
+
+def _arrow_parquet_codec(spark: SparkSession) -> dict:
+    """pq.write_table compression arguments for the session's parquet
+    codec. zstd gets parquet-mr's default level 3 (pyarrow's default,
+    1, writes larger files than Spark); other codecs take no level."""
+    name = spark.conf.get("spark.sql.parquet.compression.codec",
+                          "snappy").lower()
+    if name not in _ARROW_CODECS:
+        raise ValueError(
+            f"the store's pyarrow writer cannot write parquet codec "
+            f"{name!r}; set spark.sql.parquet.compression.codec to one "
+            f"of {sorted(_ARROW_CODECS)}")
+    if name == "zstd":
+        return {"compression": "zstd", "compression_level": 3}
+    return {"compression": _ARROW_CODECS[name]}
+
+
+def _spark_sorted(table: pa.Table, keys) -> pa.Table:
+    """``table`` sorted by ``keys`` the way Spark sorts: strings and
+    binaries by their bytes, nulls first."""
+    return table.take(pc.sort_indices(
+        table, sort_keys=[(c, "ascending") for c in keys],
+        null_placement="at_start"))
+
+
+def store_file_writer(spark: SparkSession):
+    """The store's file format for the writers that skip Spark's (the
+    chunk sink, compaction): returns ``write(table, path)``, which
+    lands ``table`` as one parquet file shaped like the Spark
+    writer's — rows in ``_STORE_SORT`` order, INT96 ``bucket_ts``,
+    every column optional, the session's parquet codec, no Arrow
+    schema in the footer. The codec is checked here, before the
+    caller computes any row."""
+    codec = _arrow_parquet_codec(spark)
+
+    def write(table: pa.Table, path) -> None:
+        schema = pa.schema([f.with_nullable(True) for f in table.schema])
+        pq.write_table(_spark_sorted(table, _STORE_SORT).cast(schema), path,
+                       use_deprecated_int96_timestamps=True,
+                       store_schema=False, **codec)
+
+    return write
+
+
+#: what compaction reads of a fine leaf, and the file it writes
+_LEAF_SCHEMA = pa.schema([*((c, pa.string()) for c in SERIES_COLS),
+                          ("bucket_ts", pa.timestamp("us")),
+                          ("chunk", pa.binary())])
+_STORE_FILE_SCHEMA = pa.schema([
+    *((c, pa.string()) for c in SERIES_COLS),
+    ("bucket_ts", pa.timestamp("us")), ("cnt", pa.int64()),
+    *((c, pa.float64()) for c in ("sum_v", "min_v", "max_v", "last_v")),
+    ("chunk", pa.binary())])
+
+
+def _read_leaf(leaf: Path) -> dict:
+    """A leaf's series columns and chunks as arrays, sorted by series,
+    bucket_ts and chunk: the input ``rollup.cascade_groups`` takes.
+    Files whose names start with ``.`` or ``_`` (Hadoop checksums,
+    ``_SUCCESS``, a writer's temp files) are skipped, as Spark's
+    reader skips them; files may differ in extra columns
+    (``write_partition`` files carry ``tier``) and in timestamp
+    type."""
+    parts = [pq.read_table(f, columns=_LEAF_SCHEMA.names,
+                           coerce_int96_timestamp_unit="us")
+             .select(_LEAF_SCHEMA.names).cast(_LEAF_SCHEMA)
+             for f in sorted(leaf.iterdir())
+             if f.is_file() and not f.name.startswith((".", "_"))]
+    rows = _spark_sorted(pa.concat_tables(parts) if parts
+                         else _LEAF_SCHEMA.empty_table(),
+                         [*_STORE_SORT, "chunk"])
+    return {c: rows[c].to_numpy(zero_copy_only=False)
+            for c in (*SERIES_COLS, "chunk")}
 
 
 def _cluster_for_store(df: DataFrame, partition_cols: list[str]) -> DataFrame:
@@ -328,12 +412,20 @@ class TieredStore:
         )
 
     def read_tier(self, spark: SparkSession, tier: str) -> DataFrame:
+        """The tier as one frame with ``p``, ``bucket_date`` and
+        ``tier`` columns. The ``p=`` dirs are listed here, not globbed
+        by Spark: given one glob path, Spark looks for a streaming-sink
+        metadata dir under it and logs a stack trace at WARN when the
+        glob is no real path. An empty tier still passes the glob, so
+        it fails as before (path does not exist)."""
+        root = self.tier_dir(tier)
+        shards = sorted(str(d) for d in root.glob("p=*")) \
+            or [str(root / "p=*")]
         # the one-pass writer stores tier as a partition directory, not a
         # file column — restore it (withColumn also normalizes stores
         # written by write_partition, whose files carry tier inline)
         return (
-            spark.read.option("basePath", str(self.tier_dir(tier)))
-            .parquet(str(self.tier_dir(tier) / "p=*"))
+            spark.read.option("basePath", str(root)).parquet(*shards)
             .withColumn("tier", F.lit(tier))
         )
 
@@ -373,33 +465,25 @@ class TieredStore:
         return dropped
 
     def _stage_promote(self, df: DataFrame, tier: str, name: str,
-                       whole_tier: bool = False,
-                       clustered: bool = False) -> int:
+                       whole_tier: bool = False) -> int:
         """Write ``df`` (must carry int column ``p`` and date column
         ``bucket_date``) as ONE staged Spark job partitioned by
         (p, bucket_date), then swap_dir each staged
-        ``p=*/bucket_date=*`` LEAF into the tier. Leaf granularity
-        matters under tiered retention: the fine tier expires early
-        (that's its policy), so a re-compaction's output covers only
-        the fine tier's surviving dates — swapping whole ``p=`` dirs
-        would destroy the coarse tier's older history, the very data
-        the coarser retention exists to keep. ``whole_tier`` swaps the
-        staged tree in for the whole tier instead (a rebuild: leaves
-        the output lacks are dropped). ``clustered``: ``df`` already
-        holds each leaf whole in one partition (the cascade's output),
-        so it is only sorted within partitions, not shuffled again.
-        Idempotent: re-running after a crash converges. Returns the
-        number of ``p=`` partitions touched."""
+        ``p=*/bucket_date=*`` LEAF into the tier — the Spark-side
+        promote of a codec upgrade and a recording refresh. Leaf
+        granularity matters under tiered retention: an output that
+        covers only some dates must not destroy the tier's other
+        leaves, so whole ``p=`` dirs are never swapped. ``whole_tier``
+        swaps the staged tree in for the whole tier instead (a
+        rebuild: leaves the output lacks are dropped). Idempotent:
+        re-running after a crash converges. Returns the number of
+        ``p=`` partitions touched."""
         staging = self.root / "_staging" / f"maint-{name}"
         if staging.exists():
             shutil.rmtree(staging)
-        # clustered: sort in place, no Exchange. The write's own sort
-        # is on (p, bucket_date) only and keeps the series order only
-        # while a leaf fits in memory; this one satisfies it instead
-        df = (df.sortWithinPartitions("p", "bucket_date", *_STORE_SORT)
-              if clustered else _cluster_for_store(df, ["p", "bucket_date"]))
         (
-            df.write.mode("overwrite")
+            _cluster_for_store(df, ["p", "bucket_date"])
+            .write.mode("overwrite")
             .partitionBy("p", "bucket_date")
             .parquet(str(staging))
         )
@@ -423,32 +507,51 @@ class TieredStore:
         byte-identical to one computed directly from raw (the cascade
         invariant).
 
-        ONE Spark job and ONE shuffle per tier: the cascade partitions
-        the fine rows (read with ``p``) by output leaf (p, bucket_date),
-        and its already-clustered output is promoted with per-leaf
-        swap_dir. ``since`` (inclusive YYYY-MM-DD) makes the run
-        incremental: every tier bucket nests within one date, so
-        recomputing only dates >= since is exact, the bucket_date
-        partition filter prunes the fine-tier scan to those dates, and
-        the leaf-granular promote leaves older coarse dates untouched
-        — nightly maintenance is O(new dates), not O(tier).
-        Returns partitions written."""
-        from .rollup import cascade
+        No Spark job: every tier bucket nests within one date, so each
+        fine ``p=N/bucket_date=D`` leaf rolls up alone into the coarse
+        leaf of the same name. The driver takes the leaves one at a
+        time, so it holds one fine leaf: it reads the leaf with pyarrow
+        (``_read_leaf``), re-rolls it with ``rollup.cascade_groups``
+        (the step the Spark ``cascade`` runs), writes one file with
+        ``store_file_writer`` into
+        ``_staging/maint-compact-<from>-<to>/p=N/bucket_date=D`` and
+        swap_dirs it over the coarse leaf. A leaf with no point writes
+        nothing, and coarse leaves with no fine leaf stay: the fine
+        tier expires first, and its coarse history must survive.
 
-        src_dir = self.tier_dir(from_tier)
-        if not any(src_dir.glob("p=*")):
-            return 0
-        fine = spark.read.option("basePath", str(src_dir)) \
-            .parquet(str(src_dir / "p=*"))
+        ``since`` (inclusive YYYY-MM-DD) makes the run incremental:
+        only leaves of dates >= since are read and rewritten, so
+        nightly maintenance is O(new dates), not O(tier). It is
+        checked before anything is touched. Idempotent: re-running
+        after a crash converges. Returns partitions written."""
         if since is not None:
-            # partition-column filter: prunes the scan to date dirs
-            # >= since before any row is read
-            fine = fine.filter(F.col("bucket_date") >= F.lit(since))
-        out = cascade(fine, to_tier, max_points=max_points) \
-            .withColumn("bucket_date", F.to_date("bucket_ts"))
-        return self._stage_promote(out, to_tier,
-                                   f"compact-{from_tier}-{to_tier}",
-                                   clustered=True)
+            # leaves are picked by comparing date strings, which holds
+            # only for the canonical YYYY-MM-DD form
+            since = date.fromisoformat(since).isoformat()
+        write = store_file_writer(spark)
+        staging = self.root / "_staging" / \
+            f"maint-compact-{from_tier}-{to_tier}"
+        if staging.exists():
+            shutil.rmtree(staging)
+        shards = set()
+        for leaf in sorted(self.tier_dir(from_tier).glob("p=*/bucket_date=*")):
+            if since is not None and leaf.name.split("=", 1)[1] < since:
+                continue
+            coarse = cascade_groups(_read_leaf(leaf), to_tier, SERIES_COLS,
+                                    max_points)
+            if coarse is None:
+                continue
+            coarse["bucket_ts"] = coarse["bucket_ts"].astype("datetime64[us]")
+            staged = staging / leaf.parent.name / leaf.name
+            staged.mkdir(parents=True)
+            write(pa.Table.from_pandas(coarse, schema=_STORE_FILE_SCHEMA,
+                                       preserve_index=False),
+                  staged / f"compact-{from_tier}-{to_tier}.parquet")
+            swap_dir(staged, self.tier_dir(to_tier) / leaf.parent.name
+                     / leaf.name)
+            shards.add(leaf.parent.name)
+        self.cleanup_staging(str(staging))
+        return len(shards)
 
     def upgrade_tier(self, spark: SparkSession, tier: str,
                      max_points: int | None = None) -> int:
@@ -476,9 +579,7 @@ class TieredStore:
         if not any(src_dir.glob("p=*")):
             return 0
         df = (
-            spark.read.option("basePath", str(src_dir))
-            .parquet(str(src_dir / "p=*"))
-            .withColumn("tier", F.lit(tier))
+            self.read_tier(spark, tier)
             .withColumn("chunk", _up("chunk"))
         )
         return self._stage_promote(df, tier, f"upgrade-{tier}")

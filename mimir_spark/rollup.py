@@ -14,9 +14,13 @@ The 1m->1h->1d *cascade* (re-aggregation from a finer tier, chunk
 merge included) is the LSM compact analogue
 (AtomicIndex.java:1280-1366) and runs on the same kernel: fine rows
 are sorted by (series, bucket, chunk), their chunks decoded in batch
-(codec.decode_many) and the points re-rolled at the coarse width, so
-rollup_1h(from raw) == cascade(rollup_1m) bit for bit, aggregates
-included — it doubles as the differential test of the one-pass path.
+(codec.decode_many) and the points re-rolled at the coarse width
+(``cascade_groups``), so rollup_1h(from raw) == cascade(rollup_1m)
+bit for bit, aggregates included — it doubles as the differential
+test of the one-pass path. The parquet store compacts with the same
+step on the driver, one leaf at a time (TieredStore.compact_tier);
+the Spark ``cascade`` is the Iceberg backend's compaction and the
+tests' reference.
 """
 
 from __future__ import annotations
@@ -437,29 +441,27 @@ def rollup_aggs(points: DataFrame, tier: str,
 # tier cascade (compact analogue + differential check of the one-pass path)
 # ---------------------------------------------------------------------------
 
-def _make_cascade_fn(to_tier, series_cols, max_points=None):
-    """mapInPandas body over fine-tier rows (series_cols, ts = bucket
-    epoch micros, chunk) sorted by (series, ts, chunk): each run of
-    whole coarse groups is decoded in row order and rolled up again
-    by the kernel at the coarse width. Groups whose chunks hold no
-    point (header-only) emit no row."""
-    unit = TIER_US[to_tier]
-
-    def block(cols):
-        ts_us, v, counts = codec.decode_many(cols["chunk"])
-        if not len(ts_us):
-            return None
-        row = np.repeat(np.arange(len(counts)), counts)
-        series = np.cumsum(_change_mask([cols[c] for c in series_cols]))
-        (starts, aggs), = rollup_groups(ts_us, v, _change_mask([series[row]]),
-                                        [unit], max_points)
-        aggs["bucket_ts"] = aggs["bucket_ts"].astype(np.int64)
-        first = row[starts]
-        return pd.DataFrame({"tier": to_tier,
-                             **{c: cols[c][first] for c in series_cols},
-                             **aggs})
-
-    return _carry_fn((to_tier,), series_cols, block)
+def cascade_groups(cols, to_tier, series_cols, max_points=None):
+    """The cascade's one step over a run of whole coarse groups:
+    ``cols`` maps ``series_cols`` and ``chunk`` to arrays sorted by
+    (series, fine bucket_ts, chunk). The chunks are decoded in row
+    order and the points rolled up again by the kernel at the coarse
+    width. Returns the coarse rows (``tier``, ``series_cols``, the
+    aggregates, ``bucket_ts`` as epoch micros), or None when no chunk
+    holds a point (header-only groups emit no row). The Spark
+    ``cascade`` and ``TieredStore.compact_tier`` both run it."""
+    ts_us, v, counts = codec.decode_many(cols["chunk"])
+    if not len(ts_us):
+        return None
+    row = np.repeat(np.arange(len(counts)), counts)
+    series = np.cumsum(_change_mask([cols[c] for c in series_cols]))
+    (starts, aggs), = rollup_groups(ts_us, v, _change_mask([series[row]]),
+                                    [TIER_US[to_tier]], max_points)
+    aggs["bucket_ts"] = aggs["bucket_ts"].astype(np.int64)
+    first = row[starts]
+    return pd.DataFrame({"tier": to_tier,
+                         **{c: cols[c][first] for c in series_cols},
+                         **aggs})
 
 
 def cascade(rollup_df: DataFrame, to_tier: str,
@@ -480,7 +482,12 @@ def cascade(rollup_df: DataFrame, to_tier: str,
     ``max_points`` bounds re-encoded chunks exactly like the one-pass
     writer (sub-chunk containers). A store frame's ``p`` is kept as a
     leading series column, so each (p, bucket_date) output leaf is
-    whole in one partition and is written without a second shuffle.
+    whole in one partition.
+
+    The parquet TieredStore does not run this job: its compact_tier
+    feeds each fine leaf to the same ``cascade_groups`` on the driver.
+    This Spark form is the Iceberg backend's compaction and the
+    reference the tests hold compact_tier to.
     """
     shard = ["p"] if "p" in rollup_df.columns else []
     series = shard + _SERIES_COLS
@@ -490,10 +497,12 @@ def cascade(rollup_df: DataFrame, to_tier: str,
     leaf = [*shard, F.to_date(F.timestamp_micros(bucket))]
     schema = ROLLUP_SCHEMA.replace("bucket_ts timestamp", "bucket_ts long") \
         + (", p int" if shard else "")
+    groups = _carry_fn((to_tier,), series, lambda cols: cascade_groups(
+        cols, to_tier, series, max_points))
     return (
         fine.repartition(*leaf)
         .sortWithinPartitions(*leaf, *_SERIES_COLS, "ts", "chunk")
-        .mapInPandas(_make_cascade_fn(to_tier, series, max_points), schema)
+        .mapInPandas(groups, schema)
         .withColumn("bucket_ts", F.timestamp_micros("bucket_ts"))
     )
 

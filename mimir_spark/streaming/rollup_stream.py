@@ -517,9 +517,10 @@ def chunk_store_sink(store, tier: str, app_id: str = "stream",
     watermark passed this batch — so the driver holds O(batch), the
     rows the stateful operator just emitted; spark.driver.maxResultSize
     caps them.
-    The files match the Spark writer's shape: INT96 ``bucket_ts``, all
-    columns optional, the session's parquet codec (zstd at level 3,
-    parquet-mr's default), rows in ``_STORE_SORT_STREAM`` order.
+    The files are written by ``lineage.store_file_writer``, in the
+    Spark writer's shape: rows in the store's series order, INT96
+    ``bucket_ts``, all columns optional, the session's parquet codec
+    (zstd at level 3, parquet-mr's default).
 
     Exactly-once under at-least-once retries WITHOUT read-modify-
     write: a closed bucket is emitted exactly once by the stateful
@@ -540,20 +541,16 @@ def chunk_store_sink(store, tier: str, app_id: str = "stream",
     import os
     import shutil
 
-    import pyarrow as pa
     import pyarrow.compute as pc
-    import pyarrow.parquet as pq
 
     from .. import lineage
 
     series_id = F.concat_ws("\x1f", F.col("kind"), F.col("series_key"))
     cols = ["kind", "series_key", "metric", "bucket_ts", "cnt",
             "sum_v", "min_v", "max_v", "last_v", "chunk"]
-    order = [(c, "ascending")
-             for c in ("bucket_date", "p", *_STORE_SORT_STREAM)]
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
-        codec = _arrow_parquet_codec(batch_df.sparkSession)
+        write_file = lineage.store_file_writer(batch_df.sparkSession)
         entry = f"{app_id}/{batch_id}"
         ledger_dir = store.root / "_streaming" / f"tier={tier}"
         new = (
@@ -569,15 +566,9 @@ def chunk_store_sink(store, tier: str, app_id: str = "stream",
         ).toArrow()
         if new.num_rows == 0:
             return
-        # Arrow sorts strings by bytes, as Spark does; nulls first too
-        new = new.take(pc.sort_indices(new, sort_keys=order,
-                                       null_placement="at_start"))
-        # Spark writes every column optional
-        schema = pa.schema([new.schema.field(c).with_nullable(True)
-                            for c in cols])
         fname = f"stream-{app_id}-{batch_id}.parquet"
         ledger_dir.mkdir(parents=True, exist_ok=True)
-        for day in pc.unique(new["bucket_date"]).to_pylist():
+        for day in sorted(pc.unique(new["bucket_date"]).to_pylist()):
             d = str(day)
             led = ledger_dir / f"bucket_date={d}.json"
             applied = ([f"{app_id}/{e}" if isinstance(e, int) else e
@@ -591,13 +582,10 @@ def chunk_store_sink(store, tier: str, app_id: str = "stream",
             if staged.exists():
                 shutil.rmtree(staged)
             staged.mkdir(parents=True)
-            for p in pc.unique(part["p"]).to_pylist():
+            for p in sorted(pc.unique(part["p"]).to_pylist()):
                 tmp = staged / f"p={p}.parquet"
-                pq.write_table(
-                    part.filter(pc.equal(part["p"], p))
-                    .select(cols).cast(schema), tmp,
-                    use_deprecated_int96_timestamps=True,
-                    store_schema=False, **codec)
+                write_file(part.filter(pc.equal(part["p"], p))
+                           .select(cols), tmp)
                 leaf = store.tier_dir(tier) / f"p={p}" / f"bucket_date={d}"
                 leaf.mkdir(parents=True, exist_ok=True)
                 os.replace(tmp, leaf / fname)
@@ -613,34 +601,6 @@ def chunk_store_sink(store, tier: str, app_id: str = "stream",
             lineage.write_json_atomic(led, applied + [entry])
 
     return write
-
-
-#: spark.sql.parquet.compression.codec -> pyarrow codec name; pyarrow
-#: writes neither lzo nor lz4_raw
-_ARROW_CODECS = {"none": "none", "uncompressed": "none",
-                 "snappy": "snappy", "gzip": "gzip", "brotli": "brotli",
-                 "lz4": "lz4", "zstd": "zstd"}
-
-
-def _arrow_parquet_codec(spark) -> dict:
-    """pq.write_table compression arguments for the session's parquet
-    codec. zstd gets parquet-mr's default level 3 (pyarrow's default,
-    1, writes larger files than Spark); other codecs take no level."""
-    name = spark.conf.get("spark.sql.parquet.compression.codec",
-                          "snappy").lower()
-    if name not in _ARROW_CODECS:
-        raise ValueError(
-            f"chunk_store_sink cannot write parquet codec {name!r}; "
-            f"set spark.sql.parquet.compression.codec to one of "
-            f"{sorted(_ARROW_CODECS)}")
-    if name == "zstd":
-        return {"compression": "zstd", "compression_level": 3}
-    return {"compression": _ARROW_CODECS[name]}
-
-
-#: chunk-sink file row order — same clustering as the batch store
-#: (_cluster_for_store) so row-group stats prune series filters
-_STORE_SORT_STREAM = ["kind", "series_key", "metric", "bucket_ts"]
 
 
 ROLLUP_CHUNK_SCHEMA = (

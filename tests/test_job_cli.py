@@ -267,12 +267,17 @@ def test_cli_fast_fail_validation(tmp_path):
                              "--distinct-sketch", bad])
         assert e.value.code == 2
 
-    # compact_job: malformed pair specs for every verb, and --retain
-    # without --as-of — all before tiered_store/get_spark
+    # compact_job: malformed pair specs for every verb, --retain
+    # without --as-of, and a --since that is no date — all before
+    # tiered_store/get_spark
     for argv in [["--store", "s", "--cascade", "1m-1h"],
                  ["--store", "s", "--cascade-sketch", "1m:1h:1d"],
                  ["--store", "s", "--expire", "1m"],
-                 ["--store", "s", "--retain", "1m:30d"]]:
+                 ["--store", "s", "--retain", "1m:30d"],
+                 ["--store", "s", "--cascade", "1m:1h",
+                  "--since", "2026-1-5"],
+                 ["--store", "s", "--cascade", "1m:1h",
+                  "--since", "2026-02-30"]]:
         with pytest.raises(SystemExit) as e:
             compact_job.main(argv)
         assert e.value.code == 2

@@ -120,40 +120,92 @@ def test_compact_tier_equals_direct(spark, source, tmp_path):
     assert all(bytes(x) == bytes(y) for x, y in zip(a["chunk"], b["chunk"]))
 
 
-def test_compact_tier_one_shuffle(spark, source, tmp_path):
-    """Compaction is one sorted pass on the rollup kernel: the executed
-    write plan has exactly one shuffle exchange, no JVM collect_list
-    aggregate and no per-row Python UDF."""
-    import re
-
+def test_compact_tier_runs_no_spark_job(spark, source, tmp_path):
+    """Compaction reads, re-rolls and writes each leaf on the driver:
+    the status store lists no Spark job newer than the last one before
+    compact_tier (job ids, not the list's size: the store evicts old
+    jobs past spark.ui.retainedJobs), and the compacted leaves
+    exist."""
     store = TieredStore(tmp_path / "s")
     run_rollup_job(spark, source, store, "j", num_partitions=2,
                    tiers=("1m",))
-    status = spark._jsparkSession.sharedState().statusStore()
+    sc = spark.sparkContext._jsc.sc()
 
-    def executions():
-        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-        ex = status.executionsList()
-        return [ex.apply(i) for i in range(ex.size())]
+    def job_ids():
+        sc.listenerBus().waitUntilEmpty()
+        jobs = sc.statusStore().jobsList(None)
+        return {jobs.apply(i).jobId() for i in range(jobs.size())}
 
-    seen = max((e.executionId() for e in executions()), default=-1)
+    last = max(job_ids())
     assert store.compact_tier(spark, "1m", "1h") == 2
-    plans = [e.physicalPlanDescription() for e in executions()
-             if e.executionId() > seen]
-    assert plans
-    final = [p.split("== Initial Plan ==")[0] for p in plans]
-    assert sum(len(re.findall(r"\bExchange \(", p)) for p in final) == 1
-    for op in ("ObjectHashAggregate", "collect_list", "ArrowEvalPython"):
-        assert not any(op in p for p in plans), op
-    # the sort under the write orders each leaf by series: a sort on
-    # (p, bucket_date) alone keeps the series order only while a leaf
-    # fits in memory
-    write = next(p for p in plans if "WriteFiles" in p)
-    node = re.search(r"WriteFiles \(\d+\)\n\s*\+- \*? ?Sort \((\d+)\)",
-                     write).group(1)
-    args = re.search(rf"\n\({node}\) Sort[^\n]*\n[^\n]*\nArguments: "
-                     r"([^\n]*)", write).group(1)
-    assert "series_key" in args.split("bucket_date")[1], args
+    assert max(job_ids()) == last
+    assert any(store.tier_dir("1h").glob("p=*/bucket_date=*/*.parquet"))
+
+
+def test_compact_tier_equals_spark_cascade(spark, source, tmp_path):
+    """Differential: compact_tier's per-leaf driver loop writes exactly
+    the rows the Spark ``cascade`` computes over the same fine rows,
+    chunk bytes included, with ``max_points`` set, on a fine tier
+    that holds a ``write_partition`` leaf (files with an inline
+    ``tier`` column), a streamed file sharing minutes with it,
+    codec-v0 and header-only chunks, a series whose only chunk is
+    header-only, and ``_SUCCESS``, checksum and dot-prefixed files
+    inside the leaves."""
+    from mimir_spark import codec
+    from mimir_spark.rollup import cascade
+    from mimir_spark.streaming.rollup_stream import chunk_store_sink
+
+    store = TieredStore(tmp_path / "diff")
+    run_rollup_job(spark, source, store, "jd", num_partitions=2,
+                   tiers=("1m",))
+    cols = ["kind", "series_key", "metric", "bucket_ts", "cnt", "sum_v",
+            "min_v", "max_v", "last_v", "chunk"]
+    p0 = store.read_tier(spark, "1m").filter("p = 0").select(*cols) \
+        .toPandas()
+    p0["chunk"] = p0["chunk"].map(bytes)
+    empty = codec.encode_chunk(np.array([], np.int64),
+                               np.array([], np.float64))
+    for i in p0.index[::4]:  # legacy chunks, same points
+        p0.at[i, "chunk"] = codec.encode_chunk_v0(
+            *codec.decode_all(p0.at[i, "chunk"]))
+    p0.at[p0.index[1], "chunk"] = empty
+    ghost = p0.iloc[[2]].assign(series_key="ghost", chunk=[empty])
+    p0 = pd.concat([p0, ghost], ignore_index=True)
+    store.write_partition(
+        spark.createDataFrame(p0.assign(tier="1m")), "1m", 0)
+
+    # streamed twins of some p=0 minutes, other values, same leaf
+    twin = p0.iloc[3::5].copy()
+    twin["chunk"] = [codec.encode_chunk(ts, v + 0.25) for ts, v in
+                     map(codec.decode_all, twin["chunk"])]
+    schema = store.read_tier(spark, "1m").select(*cols).schema
+    chunk_store_sink(store, "1m", num_partitions=1)(
+        spark.createDataFrame(twin, schema).withColumn(
+            "bucket_ts", F.expr("cast(bucket_ts as timestamp_ntz)")), 0)
+    leaves = sorted(store.tier_dir("1m").glob("p=*/bucket_date=*"))
+    assert any(any(leaf.glob("stream-*")) and any(leaf.glob("part-*"))
+               for leaf in leaves)
+    assert any(leaf.glob(".*.crc") for leaf in leaves)
+    for leaf in leaves:
+        (leaf / "_SUCCESS").write_bytes(b"")
+        (leaf / ".ghost.parquet.crc").write_bytes(b"not a checksum")
+        (leaf / ".tmp-part-0.parquet").write_bytes(b"not parquet")
+
+    key = ["p", "kind", "series_key", "metric", "bucket_ts"]
+    out = [*key, "cnt", "sum_v", "min_v", "max_v", "last_v", "chunk"]
+    want = cascade(store.read_tier(spark, "1m"), "1h", max_points=4) \
+        .select(*out).toPandas()
+    assert store.compact_tier(spark, "1m", "1h", max_points=4) == 2
+    got = store.read_tier(spark, "1h")
+    assert got.filter(F.to_date("bucket_ts") != F.col("bucket_date")) \
+        .count() == 0
+    got = got.select(*out).toPandas()
+    want, got = (d.assign(chunk=d["chunk"].map(bytes))
+                 .sort_values(key, kind="mergesort").reset_index(drop=True)
+                 for d in (want, got))
+    assert (want["cnt"] > 4).any()
+    assert not (got["series_key"] == "ghost").any()
+    pd.testing.assert_frame_equal(got, want, check_dtype=False)
 
 
 def test_compact_preserves_expired_fine_dates(spark, source, tmp_path):
@@ -211,8 +263,11 @@ def _leaf_snapshot(root, pattern):
 def test_incremental_compact_since(spark, source, tmp_path):
     """compact_tier(since=d) recomputes only dates >= d: the result
     equals the full recompute on those dates, older coarse leaves are
-    bit-untouched (same files, sizes, mtimes), and the fine-tier scan
-    prunes to the selected date dirs via PartitionFilters."""
+    bit-untouched (same files, sizes, mtimes), and no file of an older
+    fine leaf is opened (an unreadable file planted there is never
+    read). A ``since`` that is no ISO date raises before anything is
+    touched: leaves are picked by comparing date strings, so
+    ``2026-1-5`` would otherwise pick the wrong ones silently."""
     s = TieredStore(tmp_path / "incstore")
     run_rollup_job(spark, source, s, "jobi", num_partitions=3,
                    tiers=("1m",))
@@ -228,6 +283,17 @@ def test_incremental_compact_since(spark, source, tmp_path):
     old_before = _leaf_snapshot(s.tier_dir("1h"),
                                 f"p=*/bucket_date={dates[0]}")
     assert old_before
+    old_fine = [leaf for leaf in s.tier_dir("1m").glob("p=*/bucket_date=*")
+                if leaf.name.split("=", 1)[1] < cutoff]
+    assert old_fine
+    for leaf in old_fine:
+        (leaf / "part-unreadable.parquet").write_bytes(b"not parquet")
+
+    tree = sorted(s.root.rglob("*"))
+    for bad in ("2026-1-5", "yesterday", "2026-02-30"):
+        with pytest.raises(ValueError):
+            s.compact_tier(spark, "1m", "1h", since=bad)
+    assert sorted(s.root.rglob("*")) == tree
 
     n = s.compact_tier(spark, "1m", "1h", since=cutoff)
     assert n == 3
@@ -237,11 +303,9 @@ def test_incremental_compact_since(spark, source, tmp_path):
     # older coarse leaves: the same files, byte-for-byte untouched
     assert _leaf_snapshot(s.tier_dir("1h"),
                           f"p=*/bucket_date={dates[0]}") == old_before
-    # and the since filter reaches the scan as a partition filter
-    src = spark.read.option("basePath", str(s.tier_dir("1m"))) \
-        .parquet(str(s.tier_dir("1m") / "p=*")) \
-        .filter(F.col("bucket_date") >= F.lit(cutoff))
-    _assert_date_partition_filter(src)
+    # the planted files are read by a run that covers their dates
+    with pytest.raises(Exception, match="[Pp]arquet"):
+        s.compact_tier(spark, "1m", "1h")
 
 
 def test_incremental_sketch_compact_since(spark, source, tmp_path):

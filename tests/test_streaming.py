@@ -764,9 +764,9 @@ def test_chunk_sink_files_match_spark_writer(spark, tmp_path):
 
     import pyarrow.parquet as pq
 
-    from mimir_spark.lineage import TieredStore
-    from mimir_spark.streaming.rollup_stream import (
-        _NTZ_TO_INSTANT, _STORE_SORT_STREAM, chunk_store_sink)
+    from mimir_spark.lineage import _STORE_SORT, TieredStore
+    from mimir_spark.streaming.rollup_stream import (_NTZ_TO_INSTANT,
+                                                     chunk_store_sink)
 
     batch = _chunk_batch(spark)
     store = TieredStore(tmp_path / "s")
@@ -788,7 +788,7 @@ def test_chunk_sink_files_match_spark_writer(spark, tmp_path):
     ref = tmp_path / "ref"
     for d in dates:
         (shaped.filter(F.col("bucket_date") == d).drop("bucket_date")
-         .repartition("p").sortWithinPartitions("p", *_STORE_SORT_STREAM)
+         .repartition("p").sortWithinPartitions("p", *_STORE_SORT)
          .write.mode("overwrite").partitionBy("p")
          .parquet(str(ref / d)))
 
