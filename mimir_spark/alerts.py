@@ -383,6 +383,7 @@ class AlertLedger:
         df.select(*EPISODE_COLS).coalesce(1).write.mode(
             "overwrite").parquet(str(stage))
         lineage.swap_dir(stage, self.rule_dir(name))
+        lineage.drop_staging(stage)
         lineage._failpoint("alerts.meta")
         lineage.write_json_atomic(self._meta_path(name), meta)
 

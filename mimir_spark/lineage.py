@@ -244,6 +244,17 @@ def swap_dir(staged: Path, dst: Path) -> None:
         shutil.rmtree(old)
 
 
+def drop_staging(path: str | Path) -> None:
+    """Remove a staging dir, then its ``_staging`` parent unless another
+    job is mid-flight there."""
+    p = Path(path)
+    shutil.rmtree(p, ignore_errors=True)
+    try:
+        p.parent.rmdir()
+    except OSError:
+        pass
+
+
 def write_json_atomic(path: Path, obj) -> None:
     """Replace the JSON sidecar ``path`` in one step: a kill mid-write
     leaves the previous file whole, where a truncated one would fail
@@ -400,7 +411,7 @@ class TieredStore:
                 shutil.copy2(old_ledger, src / old_ledger.name)
             swap_dir(src, dst)
             replaced.append(src.name.split("=", 1)[1])
-        shutil.rmtree(staging, ignore_errors=True)
+        self.cleanup_staging(str(staging))
         if not replaced:
             # e.g. `since` past every fine date: nothing written, and
             # the tier dir (maybe absent) must not be read
@@ -494,7 +505,7 @@ class TieredStore:
             for src in leaves:
                 swap_dir(src, self.tier_dir(tier) / src.parent.name
                          / src.name)
-            shutil.rmtree(staging, ignore_errors=True)
+        self.cleanup_staging(str(staging))
         return len({src.parent.name for src in leaves})
 
     def compact_tier(self, spark: SparkSession, from_tier: str,
@@ -594,12 +605,7 @@ class TieredStore:
         return str(self.root / "_staging" / f"job={job_id}-turns")
 
     def cleanup_staging(self, path: str) -> None:
-        p = Path(path)
-        shutil.rmtree(p, ignore_errors=True)
-        try:  # drop the _staging parent when no other job is mid-flight
-            p.parent.rmdir()
-        except OSError:
-            pass
+        drop_staging(path)
 
     # -- lineage -----------------------------------------------------------
 
@@ -694,11 +700,7 @@ class TieredStore:
                          self.tier_dir(tier) / f"p={p}")
             self.commit_lineage(row)
             results.append(row)
-        shutil.rmtree(staging, ignore_errors=True)
-        try:  # drop the _staging parent when no other job is mid-flight
-            staging.parent.rmdir()
-        except OSError:
-            pass
+        self.cleanup_staging(str(staging))
         return results
 
 

@@ -9,8 +9,8 @@ step and no ``finally`` cleanup of the stopped run reaches it. The
 re-run works on the copy. "The same store" is every tier's rows
 (chunk bytes included), the applied-batch ledgers, the lineage rows
 without ``committed_at``, the meta sidecars and the directory layout
-— which also proves no ``.old-*``, ``.tmp-*`` or staging debris is
-left."""
+— which also proves no ``.old-*``, ``.tmp-*``, ``.stage-*`` or
+``_staging`` debris is left."""
 
 from __future__ import annotations
 
@@ -39,7 +39,7 @@ from mimir_spark.streaming.rollup_stream import (chunk_store_sink,
 TIERS = ("1h", "1d")
 P = 2
 T1 = "2026-03-01"
-_DEBRIS = (".old-", ".tmp-", ".stage-")
+_DEBRIS = (".old-", ".tmp-", ".stage-", "_staging")
 
 
 class Crash(RuntimeError):
