@@ -128,61 +128,25 @@ def _read_leaf(leaf: Path) -> dict:
             for c in (*SERIES_COLS, "chunk")}
 
 
-def _cluster_for_store(df: DataFrame, partition_cols: list[str]) -> DataFrame:
-    """File-layout discipline for every tier-store write: repartition
-    by the directory-partition columns so each (tier, p, bucket_date)
-    leaf is written by exactly ONE task (one file per leaf, not one
-    per upstream shuffle partition — measured locally: 2947 files for
-    a ~17k-row tier before, ~leaf-count after; at 100 TB the same
-    pattern is metadata/listing pressure on the object store), then
-    sort within partitions so row-group stats cluster by series. The
-    extra shuffle moves only rollup OUTPUT (~100x smaller than the
-    job's input)."""
+def _stage_write(df: DataFrame, staging: Path, by: list[str]) -> None:
+    """Write ``df`` as parquet partitioned by ``by`` into ``staging``,
+    replacing what an earlier attempt left there: the one Spark write
+    of every store directory. The caller swap_dirs the staged dir, or
+    its leaves, into place.
+
+    File layout: AQE's rebalance shuffle on ``by`` writes a leaf (the
+    whole ``staging`` dir when ``by`` is empty) with one task, so one
+    file, while the leaf is small, and splits it into files of about
+    ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` once it grows
+    past that (at 100x scale a day of 1m histogram bins is multi-GB,
+    too big for one reducer). Each task sorts its rows by ``by`` and
+    the ``_STORE_SORT`` columns the frame has, so parquet row-group
+    stats cluster by series."""
+    if staging.exists():
+        shutil.rmtree(staging)
     cols = [c for c in _STORE_SORT if c in df.columns]
-    return df.repartition(*partition_cols) \
-        .sortWithinPartitions(*partition_cols, *cols)
-
-
-def aux_shards() -> int:
-    """Write-side shard count P for the auxiliary (sketch/histogram)
-    tiers: their directory layout has no ``p=`` level (readers filter
-    on kind/metric/series, never on a shard id), but writing ONE task
-    per bucket_date leaf is the r5 verdict's write-path scale-killer —
-    a day of 1m histogram bins across every series is a multi-GB
-    single reducer at 100x scale. Sharding the repartition key by
-    hash(series) % P keeps the atomic per-date-dir swap/ledger
-    machinery byte-compatible while writing each leaf with P parallel
-    tasks / P series-sorted files (row-group stats prune within each
-    file exactly as before). Local default 8 matches the aggregate
-    tiers' num_partitions; size it to cluster reducer capacity via
-    SPARK_GRAFT_AUX_SHARDS in production. Read at each write, not at
-    import, so a value set after import takes effect."""
-    return int(os.environ.get("SPARK_GRAFT_AUX_SHARDS", "8"))
-
-
-def _aux_shard_col():
-    return F.pmod(F.xxhash64("kind", "series_key"), F.lit(aux_shards()))
-
-
-def _cluster_for_aux(df: DataFrame) -> DataFrame:
-    """Aux-tier variant of ``_cluster_for_store``: up to P write tasks
-    per bucket_date leaf instead of one (see aux_shards).
-
-    Key-cardinality trade, deliberate: hashing (date, shard mod P)
-    keeps files-per-leaf <= P (a shard's rows can merge with another
-    shard's via hash collision — fewer, larger files, the safe
-    direction — but never split), and a multi-date write exposes
-    dates x P keys, so total parallelism grows with the date count.
-    The alternative — repartition(P, full-cardinality series hash) as
-    the single-date streaming sink does — would cap a WHOLE nightly
-    multi-date write at P tasks. Collisions only bite when
-    spark.sql.shuffle.partitions is small relative to dates x P
-    (birthday math: ~5% expected loss at 64 partitions for one
-    date's 8 shards); production sizes shuffle partitions far above
-    that."""
-    cols = [c for c in _STORE_SORT if c in df.columns]
-    return df.repartition(F.col("bucket_date"), _aux_shard_col()) \
-        .sortWithinPartitions("bucket_date", *cols)
+    df.hint("rebalance", *by).sortWithinPartitions(*by, *cols) \
+        .write.partitionBy(*by).parquet(str(staging))
 
 
 def _failpoint(name: str) -> None:
@@ -275,19 +239,7 @@ class TieredStore:
         return self.root / f"tier={tier}"
 
     def write_partition(self, df: DataFrame, tier: str, partition_id: int) -> None:
-        out = self.tier_dir(tier) / f"p={partition_id}"
-        tmp = out.with_name(f".tmp-{out.name}")
-        if tmp.exists():
-            shutil.rmtree(tmp)
-        (
-            _cluster_for_store(
-                df.withColumn("bucket_date", F.to_date("bucket_ts")),
-                ["bucket_date"])
-            .write.mode("overwrite")
-            .partitionBy("bucket_date")
-            .parquet(str(tmp))
-        )
-        swap_dir(tmp, out)
+        self._write_dir(df, self.tier_dir(tier) / f"p={partition_id}")
 
     def sketch_dir(self, tier: str) -> Path:
         return self.root / f"sketch={tier}"
@@ -295,35 +247,26 @@ class TieredStore:
     def hist_dir(self, tier: str) -> Path:
         return self.root / f"hist={tier}"
 
-    def _write_aux_tier(self, df: DataFrame, out: Path) -> None:
-        """Shared auxiliary-tier (sketch / histogram) writer:
-        date-partitioned like the aggregate tiers (same O(metadata)
-        expiry via the shared layout), swapped into place by swap_dir,
-        aux_shards() series-sorted files per date leaf written by as
-        many parallel tasks (_cluster_for_aux — the r6 fix for the
-        single-reducer-per-date write bottleneck)."""
+    @staticmethod
+    def _write_dir(df: DataFrame, out: Path) -> None:
+        """Replace directory ``out`` with ``df`` in bucket_date leaves:
+        a tier shard, or a whole sketch or histogram tier (the same
+        date layout, so the same O(metadata) expiry)."""
         tmp = out.with_name(f".tmp-{out.name}")
-        if tmp.exists():
-            shutil.rmtree(tmp)
-        (
-            _cluster_for_aux(
-                df.withColumn("bucket_date", F.to_date("bucket_ts")))
-            .write.mode("overwrite")
-            .partitionBy("bucket_date")
-            .parquet(str(tmp))
-        )
+        _stage_write(df.withColumn("bucket_date", F.to_date("bucket_ts")),
+                     tmp, ["bucket_date"])
         swap_dir(tmp, out)
 
     def write_sketch_tier(self, sketch_df: DataFrame, tier: str) -> None:
         """Persist a distinct-count sketch tier (rollup_distinct_sketch
         output) next to the aggregate tiers."""
-        self._write_aux_tier(sketch_df, self.sketch_dir(tier))
+        self._write_dir(sketch_df, self.sketch_dir(tier))
 
     def write_hist_tier(self, hist_df: DataFrame, tier: str) -> None:
         """Persist a quantile-histogram tier (histogram.rollup_histogram
         output) next to the aggregate tiers — same layout, swap, and
         expiry discipline as the distinct-sketch tier."""
-        self._write_aux_tier(hist_df, self.hist_dir(tier))
+        self._write_dir(hist_df, self.hist_dir(tier))
 
     def read_sketch_tier(self, spark: SparkSession, tier: str) -> DataFrame:
         return (
@@ -393,34 +336,20 @@ class TieredStore:
             .withColumn("bucket_date", F.to_date("bucket_ts"))
         staging = self.root / "_staging" / \
             f"{label}-compact-{from_tier}-{to_tier}"
-        if staging.exists():
-            shutil.rmtree(staging)
-        (
-            _cluster_for_aux(coarse)
-            .write.mode("overwrite")
-            .partitionBy("bucket_date")
-            .parquet(str(staging))
-        )
+        _stage_write(coarse, staging, ["bucket_date"])
         out_root = dir_of(to_tier)
-        replaced = []
+        rows = 0
         for src in sorted(staging.glob("bucket_date=*")):
+            rows += sum(pq.read_metadata(f).num_rows
+                        for f in src.glob("*.parquet"))
             dst = out_root / src.name
             heal_swap(dst)  # the ledger below may sit in its .old
             old_ledger = dst / "_applied_batches.json"
             if old_ledger.exists():
                 shutil.copy2(old_ledger, src / old_ledger.name)
             swap_dir(src, dst)
-            replaced.append(src.name.split("=", 1)[1])
         self.cleanup_staging(str(staging))
-        if not replaced:
-            # e.g. `since` past every fine date: nothing written, and
-            # the tier dir (maybe absent) must not be read
-            return 0
-        return (
-            read_of(spark, to_tier)
-            .filter(F.col("bucket_date").cast("string").isin(replaced))
-            .count()
-        )
+        return rows
 
     def read_tier(self, spark: SparkSession, tier: str) -> DataFrame:
         """The tier as one frame with ``p``, ``bucket_date`` and
@@ -490,14 +419,7 @@ class TieredStore:
         re-running after a crash converges. Returns the number of
         ``p=`` partitions touched."""
         staging = self.root / "_staging" / f"maint-{name}"
-        if staging.exists():
-            shutil.rmtree(staging)
-        (
-            _cluster_for_store(df, ["p", "bucket_date"])
-            .write.mode("overwrite")
-            .partitionBy("p", "bucket_date")
-            .parquet(str(staging))
-        )
+        _stage_write(df, staging, ["p", "bucket_date"])
         leaves = sorted(staging.glob("p=*/bucket_date=*"))
         if whole_tier:
             swap_dir(staging, self.tier_dir(tier))
@@ -650,14 +572,7 @@ class TieredStore:
         snapshot (p IN pending — whole-shard replace) + a lineage-table
         MERGE (sources/iceberg_store.py)."""
         staging = self.root / "_staging" / f"job={job_id}"
-        if staging.exists():
-            shutil.rmtree(staging)
-        (
-            _cluster_for_store(out, ["tier", "p", "bucket_date"])
-            .write.mode("overwrite")
-            .partitionBy("tier", "p", "bucket_date")
-            .parquet(str(staging))
-        )
+        _stage_write(out, staging, ["tier", "p", "bucket_date"])
         # per-shard lineage metrics from the staged output: rows_in =
         # the deduped turn count (every turn emits exactly one
         # conv/turn_rate point, so the finest tier's cnt sums recover

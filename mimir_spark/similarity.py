@@ -133,8 +133,7 @@ def write_embeddings_bucketed(embeddings: DataFrame, path: str,
         dim = len(embeddings.select(vec_col).first()[0])
     sigs = hyperplane_signature(embeddings, n_planes, dim, seed, id_col, vec_col)
     # one file per bucket partition (repartition on the partition
-    # column), not one per upstream task — same store-layout
-    # discipline as lineage._cluster_for_store
+    # column), not one per upstream task
     sigs.repartition("bucket").write.mode("overwrite") \
         .partitionBy("bucket").parquet(str(path))
 

@@ -21,40 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..ingest import token_count_col
+from ..ingest import turn_metrics
 from ..rollup import TIER_TRUNC
-
-
-def stream_turn_metrics(stream: DataFrame) -> DataFrame:
-    """Per-turn metric explode for a streaming transcripts source
-    (same rules as ingest.turn_metrics; streaming-safe expressions)."""
-    tok = token_count_col().cast("double")
-    entry = lambda kind, key, metric, v: F.struct(  # noqa: E731
-        kind.alias("kind"), key.alias("series_key"),
-        metric.alias("metric"), v.alias("v"),
-    )
-    conv = F.col("conv_id")
-    role_name = (
-        F.when(F.col("role").isin("user", "assistant", "tool"),
-               F.concat(F.lit("role_mix_"), F.col("role")))
-        .otherwise(F.lit("role_mix_other"))
-    )
-    entries = F.array(
-        entry(F.lit("conv"), conv, F.lit("turn_rate"), F.lit(1.0)),
-        entry(F.lit("conv"), conv, F.lit("token_volume"), tok),
-        entry(F.lit("conv"), conv, role_name,
-              F.when(F.col("role").isNotNull(), F.lit(1.0))),
-        entry(F.lit("tool"), F.col("tool"), F.lit("turn_rate"),
-              F.when(F.col("tool").isNotNull(), F.lit(1.0))),
-        entry(F.lit("tool"), F.col("tool"), F.lit("token_volume"),
-              F.when(F.col("tool").isNotNull(), tok)),
-    )
-    return (
-        stream.select(F.explode(entries).alias("e"), "ts", "conv_id", "turn_idx")
-        .filter(F.col("e.v").isNotNull() & F.col("e.series_key").isNotNull())
-        .select("e.kind", "e.series_key", "e.metric", "ts", "conv_id",
-                "turn_idx", "e.v")
-    )
 
 
 def _as_event_time(stream: DataFrame) -> DataFrame:
@@ -137,7 +105,7 @@ def _deduped_points(stream: DataFrame, watermark: str) -> DataFrame:
         _as_event_time(stream).withWatermark("ts", watermark)
         .dropDuplicatesWithinWatermark(["conv_id", "turn_idx"])
     )
-    return stream_turn_metrics(deduped)  # watermark propagates
+    return turn_metrics(deduped)  # watermark propagates
 
 
 def streaming_rollup(stream: DataFrame, tier: str = "1m",
@@ -258,6 +226,21 @@ _SKETCH_LEDGER = "_applied_batches.json"
 #: crash in between makes the retry re-append the same deterministic
 #: line; readers dedupe on (app, batch, date) keeping the last.
 _STREAM_METRICS = "metrics.jsonl"
+
+
+def _load_ledger(led, app_id: str) -> list:
+    """A date's applied-batch ledger (``[]`` when there is none).
+    Bare-int entries, written by the pre-app_id sinks, are read as the
+    CURRENT app_id's: they came from the same checkpoint lineage this
+    query resumed (a fresh incarnation starts with a fresh tier per the
+    recovery contract), so they are this incarnation's applied batches
+    — without the mapping, an upgraded sink would re-apply them."""
+    import json
+
+    if not led.exists():
+        return []
+    return [f"{app_id}/{e}" if isinstance(e, int) else e
+            for e in json.loads(led.read_text())]
 
 
 def _append_stream_metrics(sidecar_dir, app_id: str, batch_id: int,
@@ -411,19 +394,8 @@ def _mergeable_store_sink(store, app_id: str, *, root, metrics_dir,
     per-date lineage metrics row.
     """
     import json
-    import shutil
 
     from .. import lineage
-
-    def _load_ledger(led) -> list:
-        """Read a ledger, normalizing bare-int entries written by the
-        pre-app_id sink to the CURRENT app_id: those entries came from
-        the same checkpoint lineage this query resumed (a fresh
-        incarnation starts with a fresh tier per the recovery
-        contract), so they are this incarnation's applied batches —
-        without the mapping, an upgraded sink would re-merge them."""
-        return [f"{app_id}/{e}" if isinstance(e, int) else e
-                for e in json.loads(led.read_text())]
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
         entry = f"{app_id}/{batch_id}"
@@ -451,9 +423,7 @@ def _mergeable_store_sink(store, app_id: str, *, root, metrics_dir,
                 # the merge reads the live dir: a crashed swap's .old
                 # must be back first
                 lineage.heal_swap(ddir)
-                ledger = ddir / _SKETCH_LEDGER
-                applied = (_load_ledger(ledger)
-                           if ledger.exists() else [])
+                applied = _load_ledger(ddir / _SKETCH_LEDGER, app_id)
                 if entry in applied:
                     continue
                 part = new.filter(F.col("bucket_date") == d) \
@@ -461,23 +431,10 @@ def _mergeable_store_sink(store, app_id: str, *, root, metrics_dir,
                 if any(ddir.glob("*.parquet")):
                     part = spark.read.parquet(str(ddir)) \
                         .select(*cols).unionByName(part)
-                merged = merge(part)
                 staged = root / f".stage-{ddir.name}"
-                if staged.exists():
-                    shutil.rmtree(staged)
-                # aux_shards() parallel writers per date dir, not one:
-                # the merge rewrites the WHOLE date partition, which
-                # at conv granularity is the r5 verdict's multi-GB
-                # single reducer. Partitioning on the full-cardinality
-                # series hash (not a mod-P shard id — 8 distinct
-                # values hashed into 8 partitions would collide, guide
-                # §2.5) spreads evenly; each file stays series-sorted
-                # so row-group stats prune exactly as before.
-                merged.repartition(lineage.aux_shards(),
-                                   F.xxhash64("kind", "series_key")) \
-                    .sortWithinPartitions(
-                        "kind", "series_key", "metric", "bucket_ts") \
-                    .write.mode("overwrite").parquet(str(staged))
+                # the date dir itself is staged (no partition level),
+                # so the staged dir is what swap_dir moves
+                lineage._stage_write(merge(part), staged, [])
                 (staged / _SKETCH_LEDGER).write_text(
                     json.dumps(applied + [entry]))
                 _append_stream_metrics(metrics_dir, app_id, batch_id, d,
@@ -537,7 +494,6 @@ def chunk_store_sink(store, tier: str, app_id: str = "stream",
     streamed dates rebuilds them (re-deriving streamed data from
     raw); streaming owns only the live tail in between.
     """
-    import json
     import os
     import shutil
 
@@ -571,9 +527,7 @@ def chunk_store_sink(store, tier: str, app_id: str = "stream",
         for day in sorted(pc.unique(new["bucket_date"]).to_pylist()):
             d = str(day)
             led = ledger_dir / f"bucket_date={d}.json"
-            applied = ([f"{app_id}/{e}" if isinstance(e, int) else e
-                        for e in json.loads(led.read_text())]
-                       if led.exists() else [])
+            applied = _load_ledger(led, app_id)
             if entry in applied:
                 continue
             part = new.filter(pc.equal(new["bucket_date"], day))

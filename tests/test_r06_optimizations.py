@@ -113,42 +113,48 @@ def test_arrow_token_count_matches_on_fixture(spark, t_small_df):
 
 
 def test_aux_tier_write_is_sharded(spark, t_small_df, tmp_path):
-    """Aux (sketch/hist) tier writes must be ABLE to fan out to
-    multiple tasks per bucket_date leaf — the r5 write-path scale
-    finding: the old repartition key (bucket_date alone) pinned every
-    date to ONE reducer by key cardinality, which AQE can never
-    split. The new (bucket_date, series-shard) key fans out; AQE
-    coalescing still merges small leaves (scale-adaptive), so the
-    fan-out is asserted with coalescing off, and the read-back must
-    stay identical either way."""
+    """Aux (sketch/hist) tier files are sized by bytes: each small
+    bucket_date leaf is one file at default settings, and a leaf past
+    AQE's advisory partition size fans out to several write tasks
+    (the r5 write-path scale finding: a leaf written by ONE reducer
+    whatever its size). The read-back is identical either way."""
     from mimir_spark.lineage import TieredStore
 
     sk = _sketch_1h(t_small_df)
-    store = TieredStore(tmp_path / "store")
-    files_per_leaf = _sketch_files_per_leaf(spark, store, sk)
-    assert max(files_per_leaf) > 1, files_per_leaf
-    back = store.read_sketch_tier(spark, "1h") \
-        .select("kind", "series_key", "metric", "bucket_ts", "cnt",
-                "n_distinct")
     ref = sk.select("kind", "series_key", "metric", "bucket_ts", "cnt",
                     "n_distinct")
-    assert back.exceptAll(ref).count() == 0
-    assert ref.exceptAll(back).count() == 0
+    dflt = _sketch_files_per_leaf(spark, TieredStore(tmp_path / "d"), sk, {})
+    assert set(dflt) == {1}, dflt
+    split = _sketch_files_per_leaf(spark, TieredStore(tmp_path / "s"), sk, {
+        "spark.sql.adaptive.coalescePartitions.enabled": "false",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "1k"})
+    assert max(split) > 1, split
+    for name in ("d", "s"):
+        back = TieredStore(tmp_path / name).read_sketch_tier(spark, "1h") \
+            .select(*ref.columns)
+        assert back.exceptAll(ref).count() == 0
+        assert ref.exceptAll(back).count() == 0
 
 
-def test_aux_shards_read_at_write_time(spark, t_small_df, tmp_path,
-                                       monkeypatch):
-    """SPARK_GRAFT_AUX_SHARDS set after the engine is imported still
-    sets the files per aux-tier date leaf."""
+def test_streamed_aux_date_dir_is_one_file(spark, t_small_df, tmp_path):
+    """The streaming sketch sink rewrites a whole date dir per batch
+    through the same byte-sized layout: a small date dir is one file,
+    not one per fixed shard."""
     from mimir_spark.lineage import TieredStore
+    from mimir_spark.streaming.rollup_stream import sketch_store_sink
 
     sk = _sketch_1h(t_small_df)
-    monkeypatch.setenv("SPARK_GRAFT_AUX_SHARDS", "1")
-    one = _sketch_files_per_leaf(spark, TieredStore(tmp_path / "one"), sk)
-    assert one and set(one) == {1}, one
-    monkeypatch.delenv("SPARK_GRAFT_AUX_SHARDS")
-    dflt = _sketch_files_per_leaf(spark, TieredStore(tmp_path / "d"), sk)
-    assert max(dflt) > 1 and max(dflt) <= 8, dflt
+    batch = sk.select("kind", "series_key", "metric",
+                      F.expr("cast(bucket_ts as timestamp_ntz)")
+                      .alias("bucket_ts"), "cnt", "distinct_sketch")
+    store = TieredStore(tmp_path / "store")
+    sketch_store_sink(store, "1h", app_id="app")(batch, 0)
+    date_dirs = sorted(store.sketch_dir("1h").glob("bucket_date=*"))
+    assert date_dirs, "no date dirs written"
+    assert [len(list(d.glob("*.parquet"))) for d in date_dirs] == \
+        [1] * len(date_dirs)
+    assert store.read_sketch_tier(spark, "1h").agg(F.sum("cnt")).first()[0] \
+        == sk.agg(F.sum("cnt")).first()[0]
 
 
 def _sketch_1h(t_small_df):
@@ -158,16 +164,17 @@ def _sketch_1h(t_small_df):
     return rollup_distinct_sketch(turn_metrics(ingest(t_small_df)), "1h")
 
 
-def _sketch_files_per_leaf(spark, store, sk) -> list[int]:
-    """Write ``sk`` as the 1h sketch tier with AQE coalescing off (it
-    merges small leaves' shards) and count the files in each leaf."""
-    key = "spark.sql.adaptive.coalescePartitions.enabled"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, "false")
+def _sketch_files_per_leaf(spark, store, sk, conf: dict) -> list[int]:
+    """Write ``sk`` as the 1h sketch tier under the session settings
+    ``conf`` and count the files in each leaf."""
+    prev = {k: spark.conf.get(k) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
     try:
         store.write_sketch_tier(sk, "1h")
     finally:
-        spark.conf.set(key, prev)
+        for k, v in prev.items():
+            spark.conf.set(k, v)
     date_dirs = sorted(store.sketch_dir("1h").glob("bucket_date=*"))
     assert date_dirs, "no date leaves written"
     return [len(list(d.glob("*.parquet"))) for d in date_dirs]

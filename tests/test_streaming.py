@@ -153,7 +153,7 @@ def ordered_stream_dir(t_small, stream_dir):
     d = stream_dir + "_ordered"
     os.makedirs(d, exist_ok=True)
     src = t_small.sort_values(["ts", "conv_id", "turn_idx"]).reset_index(drop=True)
-    slices = np.array_split(src, 4)
+    slices = [src.iloc[ix] for ix in np.array_split(np.arange(len(src)), 4)]
     for i, sl in enumerate(slices):
         sl.to_parquet(f"{d}/{i:03d}.parquet", index=False,
                       coerce_timestamps="us", allow_truncated_timestamps=True)
@@ -253,7 +253,8 @@ def test_live_tail_handoff_and_nightly_rebuild(spark, t_small, t_small_df,
     # below T); the valid-from fence keeps it out of batch territory
     d = str(tmp_path / "tail_src")
     os.makedirs(d)
-    for i, sl in enumerate(np.array_split(src, 3)):
+    for i, ix in enumerate(np.array_split(np.arange(len(src)), 3)):
+        sl = src.iloc[ix]
         sl.to_parquet(f"{d}/{i:03d}.parquet", index=False,
                       coerce_timestamps="us",
                       allow_truncated_timestamps=True)

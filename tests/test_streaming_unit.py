@@ -263,7 +263,8 @@ def test_valid_event_time_guard(spark, t_small, tmp_path):
     d_clean, d_bad = str(tmp_path / "clean"), str(tmp_path / "bad")
     for d, first in ((d_clean, src.iloc[:0]), (d_bad, poison)):
         os.makedirs(d)
-        slices = [first, *np.array_split(src, 3)]
+        slices = [first, *(src.iloc[ix] for ix in
+                           np.array_split(np.arange(len(src)), 3))]
         for i, sl in enumerate(slices):
             if len(sl) == 0:
                 continue
